@@ -173,9 +173,8 @@ object IncrementalDedup {
       else VersionedTable.write(newBands, indexRoot,
         partitionBy = Seq("band_id"), metaFiles = meta,
         operation = "DEDUP_INGEST")
-      if (autoCompactEvery > 0 && VersionedTable.latestVersion(indexRoot)
-            .exists(v => VersionedTable.dataDirsOf(indexRoot, v).size >=
-              autoCompactEvery))
+      if (autoCompactEvery > 0 && VersionedTable.latestSnapshot(indexRoot)
+            .exists(_.dataDirs.size >= autoCompactEvery))
         VersionedTable.compactChain(spark, indexRoot)
     }
     accepted

@@ -82,9 +82,9 @@ case class GvtInsertCommand(root: String, query: LogicalPlan,
   override def innerChildren: Seq[LogicalPlan] = Seq(query)
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val base = VersionedTable.latestVersion(root).getOrElse(
+    val snap = VersionedTable.latestSnapshot(root).getOrElse(
       throw new IllegalArgumentException(s"gvt INSERT: no table at $root"))
-    val target = VersionedTable.readVersion(spark, root, base).schema
+    val target = snap.schema
     val targetNames = target.fieldNames.toSeq
     def typeOf(n: String) = target(target.fieldIndex(n)).dataType
     (staticParts.keys ++ dynamicParts).foreach(k =>
@@ -143,7 +143,7 @@ case class GvtInsertCommand(root: String, query: LogicalPlan,
         operation = "INSERT") }
       return Seq.empty
     }
-    val layout = VersionedTable.layoutOf(root, base)
+    val layout = snap.layout
     // dynamic partitions to resolve from the batch: an explicit
     // `PARTITION (p)` key, or — under the SQL-standard conf
     // spark.sql.sources.partitionOverwriteMode=dynamic — every layout

@@ -616,10 +616,9 @@ case class GvtOptimizeCommand(target: String, zorderBy: Seq[String],
     minB.foreach { b =>
       return Seq(Row(VersionedTable.compactSmall(spark, root, b)))
     }
-    val chainFoldable = zorderBy.isEmpty &&
-      VersionedTable.chainDvDirs(root, v).isEmpty &&
-      VersionedTable.dataDirsOf(root, v).size > 2 &&
-      VersionedTable.dataDirsOf(root, v).forall(_.startsWith(s"$root/"))
+    val snap = VersionedTable.snapshot(root, v)
+    val chainFoldable = zorderBy.isEmpty && snap.dvDirs.isEmpty &&
+      snap.dataDirs.size > 2 && snap.roots == Set(root)
     val nv =
       if (chainFoldable) VersionedTable.compactChain(spark, root)
       else VersionedTable.compact(spark, root, zorderBy = zorderBy)
@@ -670,9 +669,8 @@ case class GvtTruncateCommand(target: String) extends LeafRunnableCommand {
     Seq(AttributeReference("new_version", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val root = GvtSqlParser.rootOf(spark, target)
-    val parts = VersionedTable.layoutOf(root,
-      VersionedTable.latestVersion(root).getOrElse(
-        throw new IllegalArgumentException(s"no versions at $root")))
+    val parts = VersionedTable.latestSnapshot(root).getOrElse(
+      throw new IllegalArgumentException(s"no versions at $root")).layout
     val meta = if (parts.isEmpty) Map.empty[String, String]
       else Map("_schema_only" -> "1", "_layout" -> parts.mkString(","))
     Seq(Row(VersionedTable.write(
@@ -1072,10 +1070,10 @@ case class GvtShowCreateTableCommand(target: String)
 
   override def run(spark: SparkSession): Seq[Row] = {
     val root = GvtSqlParser.rootOf(spark, target)
-    val v = VersionedTable.latestVersion(root).getOrElse(
+    val snap = VersionedTable.latestSnapshot(root).getOrElse(
       throw new IllegalArgumentException(s"no versions at $root"))
-    val schema = VersionedTable.readVersion(spark, root, v).schema
-    val parts = VersionedTable.layoutOf(root, v)
+    val schema = snap.schema
+    val parts = snap.layout
     val idents = VersionedTable.identityColumns(root)
     val gens = VersionedTable.generatedColumns(root)
     val dflts = VersionedTable.columnDefaults(root)
@@ -1126,18 +1124,16 @@ case class GvtCreateBloomIndexCommand(target: String, cols: Seq[String])
   override def run(spark: SparkSession): Seq[Row] = {
     require(cols.nonEmpty, "CREATE BLOOMFILTER INDEX: no columns")
     val root = GvtSqlParser.rootOf(spark, target)
-    val v = VersionedTable.latestVersion(root).getOrElse(
+    val snap = VersionedTable.latestSnapshot(root).getOrElse(
       throw new IllegalArgumentException(s"no versions at $root"))
-    val live = VersionedTable.readVersion(spark, root, v)
-    cols.foreach(c => require(live.columns.contains(c),
+    cols.foreach(c => require(snap.schema.fieldNames.contains(c),
       s"CREATE BLOOMFILTER INDEX: no column $c in the live schema"))
     VersionedTable.setTblProperties(root,
       Map("gvt.bloomIndexCols" -> cols.mkString(",")))
     // backfill: every data dir of the live chain inside this root
     // (cross-root shallow-clone dirs index under their own table)
-    VersionedTable.dataDirsOf(root, v)
+    snap.dataBearingDirs
       .filter(_.startsWith(s"$root/"))
-      .filterNot(VersionedTable.isSchemaOnlySlice)
       .foreach { d =>
         val dv = d.substring(d.lastIndexOf("v=") + 2).toLong
         VersionedTable.collectBlooms(spark, root, dv, cols)
@@ -1154,9 +1150,8 @@ case class GvtDropBloomIndexCommand(target: String)
   override def run(spark: SparkSession): Seq[Row] = {
     val root = GvtSqlParser.rootOf(spark, target)
     VersionedTable.unsetTblProperties(root, Seq("gvt.bloomIndexCols"))
-    val v = VersionedTable.latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    VersionedTable.dataDirsOf(root, v)
+    VersionedTable.latestSnapshot(root).getOrElse(
+      throw new IllegalArgumentException(s"no versions at $root")).dataDirs
       .filter(_.startsWith(s"$root/"))
       .foreach(d => VersionedTable.deleteBloomSidecar(d))
     Seq.empty

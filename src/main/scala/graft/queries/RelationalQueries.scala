@@ -1326,7 +1326,6 @@ object RelationalQueries {
         s"OPTIONS (path '$root')")
       sess.sql("DELETE FROM sql_vacp_t WHERE status = 'F'").collect()
       sess.sql("VACUUM sql_vacp_t RETAIN 0 HOURS").collect()
-      graft.sources.VersionedTable.invalidateElisionCache()
       sess.sql(s"CREATE OR REPLACE TEMPORARY VIEW sql_vacp_t USING gvt " +
         s"OPTIONS (path '$root')")
       sess.sql("""SELECT status, count(*) AS n,

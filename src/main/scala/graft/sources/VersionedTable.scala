@@ -208,9 +208,8 @@ object VersionedTable {
       .filter(_.startsWith("v=")).map(_.drop(2).toLong).sorted
 
   /** Tiny thread-safe LRU (access-order LinkedHashMap under its own
-    * lock). The metadata memos used to dump WHOLESALE at a size cap —
-    * a long-lived driver crossing the threshold re-paid every inference
-    * at once (r16 verdict); bounded eviction keeps the hot set. */
+    * lock): bounded eviction keeps the hot set, where a wholesale clear
+    * at a size cap would re-pay every entry at once. */
   private final class Lru[K, V](max: Int) {
     private val m = new java.util.LinkedHashMap[K, V](64, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
@@ -219,16 +218,20 @@ object VersionedTable {
     def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
     def put(k: K, v: V): Unit = m.synchronized { m.put(k, v); () }
     def clear(): Unit = m.synchronized(m.clear())
+    def removeIf(p: (K, V) => Boolean): Unit = m.synchronized {
+      m.entrySet.removeIf(e => p(e.getKey, e.getValue)); ()
+    }
   }
 
   /** True when some path segment is a `v=<n>` version dir — write-once
-    * by the commit protocol, so its mtime alone keys a memo. */
+    * by the commit protocol, so its mtime alone fingerprints it. */
   private def isVersionPath(d: String): Boolean =
     d.split('/').exists(seg => seg.length > 2 && seg.startsWith("v=") &&
       seg.drop(2).forall(_.isDigit))
 
-  /** Memo fingerprint of a directory. Version dirs: the dir mtime (the
-    * write-once argument). Every other dir (testdata drops, layer
+  /** Fingerprint of a directory — the validity key of cached snapshots
+    * (their version dir) and of the file memo. Version dirs: the dir
+    * mtime (the write-once argument). Every other dir (testdata drops, layer
     * overwrite targets) is REWRITABLE: a delete+rewrite inside one
     * mtime tick (or on a coarse-mtime store) must not serve the stale
     * entry (ADVICE r16), so the child listing — count, mtime sum, byte
@@ -252,22 +255,9 @@ object VersionedTable {
 
   /** Hive-style partition columns of a snapshot data directory: the
     * first chain of `name=value` subdirectories (empty = unpartitioned).
-    * One listing per nesting level — metadata-sized. */
-  private val partColsCache = new Lru[(String, Long), Seq[String]](8192)
-
+    * One listing per nesting level — metadata-sized; snapshot chains
+    * carry the result per dir ([[Snapshot.flat]], [[Snapshot.layout]]). */
   private[graft] def partColsOf(dir: HPath): Seq[String] = {
-    // memoized on (dir, fingerprint): version dirs are write-once, and
-    // this listing runs once per dir per chain-read CONSTRUCTION —
-    // dozens of times per multi-commit fixture
-    val key = (dir.toString, dirFingerprint(dir))
-    partColsCache.get(key).getOrElse {
-      val out = partColsUncached(dir)
-      partColsCache.put(key, out)
-      out
-    }
-  }
-
-  private def partColsUncached(dir: HPath): Seq[String] = {
     val fc = fcOf(dir)
     if (!fc.util.exists(dir)) Seq.empty
     else fc.util.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
@@ -291,22 +281,33 @@ object VersionedTable {
     * silently drop the new column when schema inference sampled an old
     * file. Schema probing is one footer read per dir, driver-side,
     * chain-length-bounded by compaction. */
-  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    if (dirs.size == 1) readDirCached(spark, dirs.head)
+  private def readDirs(spark: SparkSession, dirs: Seq[String],
+                       flat: Option[Boolean] = None,
+                       tag: DataFrame => DataFrame = identity): DataFrame =
+    if (dirs.size == 1) tag(readDirCached(spark, dirs.head))
     // the single multi-dir read is legal only when EVERY member is
     // layout-free: one hive member (or a mixed flat/hive chain — a
     // layout-preserving rewrite stacked on a legacy flat DML commit)
     // must read per-dir with its own basePath, or Spark's partition
     // discovery throws CONFLICTING_DIRECTORY_STRUCTURES
-    else if (dirs.forall(d => partColsOf(new HPath(d)).isEmpty)) {
+    else if (flat.getOrElse(dirs.forall(d => partColsOf(new HPath(d)).isEmpty))) {
       val schemas = dirs.map(d => parquetDirSchema(spark, d))
       if (schemas.forall(_ == schemas.head))
-        spark.read.schema(schemas.head).parquet(dirs: _*)
-      else dirs.map(readDirCached(spark, _))
+        tag(spark.read.schema(schemas.head).parquet(dirs: _*))
+      else dirs.map(d => tag(readDirCached(spark, d)))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     }
-    else dirs.map(d => readDirCached(spark, d, basePath = true))
+    else dirs.map(d => tag(readDirCached(spark, d, basePath = true)))
       .reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** Tag each row with its `(__gvt_file, __gvt_pos)` provenance — the
+    * `_metadata` struct resolves only directly against a file relation,
+    * so it must attach BEFORE any union. */
+  private def withRowIds(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    df.select(col("*"), col("_metadata.file_path").as("__gvt_file"),
+      col("_metadata.row_index").as("__gvt_pos"))
+  }
 
   /** The live version: the `_LATEST` hint healed FORWARD through commit
     * markers. A commit is durable the instant its `after=<base>` marker
@@ -324,50 +325,177 @@ object VersionedTable {
     cur
   }
 
-  /** Commit-meta memo: a committed version dir's meta FILES (content
-    * and absence alike) are write-once — the commit stamps them before
-    * its marker publishes and nothing edits an old version dir — so
-    * each (root, version, name) read is a constant, guarded by the
-    * version dir's mtime (a recreated root, or a backfilled `_cdf`
-    * sidecar landing in an old dir, changes the mtime and misses).
-    * The chain/DV/clone resolution re-read `_parent`/`_dv_parent`/
-    * `_clone_src`/`_colmap` per CONSTRUCTION — 300-700 small reads per
-    * multi-commit fixture (r16 verdict item 3); a hit is now one stat. */
-  private val metaCache = new Lru[(String, Long, String, Long), Option[String]](16384)
+  // ── Snapshots (Delta Snapshot analogue) ─────────────────────────────
+  //
+  // Every metadata fact about a table version — committed chain, data
+  // chain across `_parent` / `_dv_parent` / `_clone_src`, deletion-vector
+  // dirs and their `_dvc` counts, column mapping, partition layout,
+  // schema-only slices, logical schema, fully-masked files, purge floor,
+  // protocol — is resolved ONCE into an immutable [[Snapshot]], which
+  // every reader and writer of a statement shares. Snapshots live in one
+  // bounded LRU keyed (root, version).
+  //
+  // Version dirs are write-once (a commit stamps its files before its
+  // marker publishes), so a snapshot stays valid until something edits
+  // history under an unchanged version. Exactly three things do, and
+  // each calls [[invalidate]], the one place snapshots are dropped:
+  //  - VACUUM, which drops versions and purges DV-dead data files;
+  //  - [[backfillChangeFeed]], which writes `_cdf` into an OLD version
+  //    dir without moving the tip (possibly within one mtime tick);
+  //  - [[invalidateSnapshots]], the hook for tests that edit table files
+  //    out of band or measure a cold resolve.
+  // A shallow clone's chain crosses into its source root, so dropping a
+  // root drops every snapshot whose chain READS from it. A cached entry
+  // also records its version dir's [[dirFingerprint]], so a table
+  // dropped and recreated at the same root is never served the old
+  // incarnation. Resolving a new tip extends its predecessor's cached
+  // snapshot: a commit pays only for its own hop. Root-level mutable
+  // state (`_LATEST`, commit markers, properties, constraints) is never
+  // cached.
 
-  /** Memoized read of a small write-once sidecar FILE next to (or
-    * inside) a commit dir (`_dvc`, `_schema_only`) keyed on
-    * (path, parent-dir mtime) — same write-once argument as
-    * [[readMeta]] for paths that don't arrive in (root, version)
-    * form. */
-  private val sideFileCache = new Lru[(String, Long), Option[String]](16384)
+  private val snapshots = new Lru[(String, Long), Snapshot](4096)
 
-  private def readSideFile(p: HPath): Option[String] = {
-    val parent = p.getParent
-    val mtime = try fcOf(parent).getFileStatus(parent).getModificationTime
-      catch { case scala.util.control.NonFatal(_) => return readString(p) }
-    val key = (p.toString, mtime)
-    sideFileCache.get(key).getOrElse {
-      val v = readString(p)
-      sideFileCache.put(key, v)
-      v
+  /** The snapshot of `(root, version)`: cached, or resolved now — the
+    * data chain is walked down to the nearest cached snapshot, then each
+    * uncached hop extends the one below it (iteratively: an uncompacted
+    * append chain can be arbitrarily long). */
+  private[graft] def snapshot(root: String, version: Long): Snapshot = {
+    var hops = List.empty[Hop]
+    var below: Option[Snapshot] = None
+    var cur: Option[(String, Long)] = Some((root, version))
+    while (cur.isDefined && below.isEmpty) {
+      val (r, v) = cur.get
+      val stamp = dirFingerprint(new HPath(s"$r/v=$v"))
+      snapshots.get((r, v)).filter(_.stamp == stamp) match {
+        case Some(s) => below = Some(s)
+        case None =>
+          val hop = readHop(r, v, stamp)
+          hops = hop :: hops
+          cur = hop.link
+      }
     }
+    hops.foldLeft(below) { (parent, hop) =>
+      val s = extend(hop, parent)
+      if (hop.stamp != -1L) snapshots.put((hop.root, hop.version), s)
+      Some(s)
+    }.get
   }
+
+  /** The snapshot of the live version, if the table has one. */
+  private[graft] def latestSnapshot(root: String): Option[Snapshot] =
+    latestVersion(root).map(snapshot(root, _))
+
+  /** A cached, still-valid snapshot — never resolves. */
+  private def cachedSnapshot(root: String, version: Long): Option[Snapshot] =
+    snapshots.get((root, version)).filter(
+      _.stamp == dirFingerprint(new HPath(s"$root/v=$version")))
+
+  private def liveSnapshot(root: String): Snapshot =
+    latestSnapshot(root).getOrElse(
+      throw new IllegalArgumentException(s"no versions at $root"))
+
+  /** Drop every cached snapshot whose data chain reads from `root`, and
+    * the file facts under it (None: everything). */
+  private def invalidate(root: Option[String]): Unit = root match {
+    case None => snapshots.clear(); fileMemo.clear()
+    case Some(r) =>
+      val under = normFileId(r).stripSuffix("/") + "/"
+      snapshots.removeIf((_, s) => s.roots.contains(r))
+      fileMemo.removeIf((k, _) => normFileId(k._1).startsWith(under))
+  }
+
+  /** Test hook: forget every snapshot and file fact — for tests that
+    * edit table files out of band or measure a cold resolve. */
+  private[graft] def invalidateSnapshots(): Unit = invalidate(None)
+
+  /** Meta files a resolve lists but does not read: presence markers and
+    * history-only payloads ([[Snapshot.meta]] reads them on demand). */
+  private val unreadMetas = Set("_SUCCESS", "_schema_only", "_metrics")
+
+  /** One version dir's own commit files, read for a resolve. */
+  private final case class Hop(root: String, version: Long, stamp: Long,
+                               metaNames: Set[String],
+                               metas: Map[String, String]) {
+    def num(name: String): Option[Long] =
+      metas.get(name).map(_.trim).filter(_ != "none").map(_.toLong)
+    /** The data-chain predecessor: an APPEND's `_parent`, a DV commit's
+      * `_dv_parent`, or a shallow clone's jump into its source table. */
+    def link: Option[(String, Long)] =
+      num("_parent").orElse(num("_dv_parent")).map(p => (root, p))
+        .orElse(metas.get("_clone_src").map(_.split('\t')).collect {
+          case Array(sr, sv) => (sr, sv.trim.toLong)
+        })
+  }
+
+  /** A version dir's meta FILES (`_`-prefixed plain files): one listing,
+    * then one read per file present — absent files cost nothing. */
+  private def readHop(root: String, v: Long, stamp: Long): Hop = {
+    val dir = new HPath(s"$root/v=$v")
+    val names = (try fcOf(dir).util.listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil })
+      .filter(st => st.isFile && st.getPath.getName.startsWith("_"))
+      .map(_.getPath.getName).toSet
+    Hop(root, v, stamp, names, names.filterNot(unreadMetas).toSeq
+      .flatMap(n => readString(new HPath(dir, n)).map(n -> _)).toMap)
+  }
+
+  /** The snapshot of `hop`'s version, extending its data parent's. */
+  private def extend(hop: Hop, parent: Option[Snapshot]): Snapshot = {
+    val Hop(root, v, stamp, metaNames, metas) = hop
+    val dir = s"$root/v=$v"
+    val prev = hop.num("_prev")
+    val info = CommitInfo(v, prev, hop.num("_commit_ts"),
+      metas.getOrElse("_operation", "WRITE"))
+    val prior = prev.flatMap(cachedSnapshot(root, _))
+    // a Vector: each tip's chain shares its predecessor's structure
+    val chain = prior.map(_.chain).getOrElse(
+      prev.filter(p => fcOf(new HPath(root)).util.exists(new HPath(s"$root/v=$p")))
+        .map(p => chainWalk(root, useCheckpoint = true, Some(p)))
+        .getOrElse(Nil)).toVector :+ info
+    // root-level facts that only VACUUM moves (and VACUUM invalidates):
+    // inherited from any cached snapshot of the same root
+    val sameRoot = prior.orElse(parent.filter(_.root == root))
+    val floor = sameRoot.map(_.purgeFloor).getOrElse(readPurgeFloor(root))
+    val protocol = probeProtocol(root,
+      sameRoot.map(_.protocol).getOrElse(noProtocol))
+    val isDv = metas.contains("_dv_parent")
+    val ownParts = partColsOf(new HPath(dir))
+    val schemaOnly = parent.map(_.schemaOnly).getOrElse(Set.empty[String]) ++
+      (if (metaNames.contains("_schema_only")) Set(dir) else Set.empty[String])
+    new Snapshot(root, v, stamp, metaNames, metas, chain,
+      dataDirs = parent.map(_.dataDirs).getOrElse(Nil) :+ dir,
+      dvDirs = parent.map(_.dvDirs).getOrElse(Nil) ++
+        (if (isDv) Seq(s"$dir/_dv") else Nil),
+      dvCounts = parent.map(_.dvCounts).getOrElse(Nil) ++
+        (if (isDv) Seq(metas.getOrElse("_dvc", "")) else Nil),
+      schemaOnly = schemaOnly,
+      colmap = metas.get("_colmap").map(parseColmap)
+        .orElse(parent.flatMap(_.colmap)),
+      flat = parent.forall(_.flat) && ownParts.isEmpty,
+      dirLayout = parent.filter(_.dataBearingDirs.nonEmpty).map(_.dirLayout)
+        .getOrElse(if (schemaOnly(dir)) Nil else ownParts),
+      purgeFloor = floor, protocol = protocol,
+      // a commit without vectors of its own masks exactly what its
+      // data parent masks
+      elide = s => parent.filter(_ => !isDv).map(_.elided)
+        .getOrElse(fullyMaskedFiles(s)))
+  }
+
+  /** The newest `_layout` declared along `s`'s committed chain (CREATE /
+    * TRUNCATE / REPLACE of a table with no data-bearing dir yet). */
+  private[sources] def declaredLayout(s: Snapshot): Seq[String] =
+    metaLatest(s, "_layout")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Seq.empty)
 
   /** Read a meta file committed into snapshot `v` via `write(metaFiles)`
-    * (e.g. a streaming writer's applied-batch watermark). */
-  def readMeta(root: String, version: Long, name: String): Option[String] = {
-    val vp = new HPath(s"$root/v=$version")
-    val mtime = try fcOf(vp).getFileStatus(vp).getModificationTime
-      catch { case scala.util.control.NonFatal(_) =>
-        return readString(new HPath(s"$root/v=$version", name)) }
-    val key = (root, version, name, mtime)
-    metaCache.get(key).getOrElse {
-      val v = readString(new HPath(s"$root/v=$version", name))
-      metaCache.put(key, v)
-      v
+    * (e.g. a streaming writer's applied-batch watermark) — from the
+    * version's cached snapshot when there is one. */
+  def readMeta(root: String, version: Long, name: String): Option[String] =
+    cachedSnapshot(root, version) match {
+      case Some(s) => s.meta(name)
+      case None => readString(new HPath(s"$root/v=$version", name))
     }
-  }
 
   /** The newest committed version's value for meta file `name`, walking
     * the chain TIP-BACKWARD — not just the tip: a non-sink commit
@@ -377,8 +505,12 @@ object VersionedTable {
     * double-apply. The walk is checkpoint-bounded metadata work and
     * stops at the first chain entry carrying the file. */
   def readMetaLatest(root: String, name: String): Option[String] =
-    committedChain(root).reverseIterator
-      .flatMap(c => readMeta(root, c.version, name)).nextOption()
+    latestSnapshot(root).flatMap(metaLatest(_, name))
+
+  private def metaLatest(s: Snapshot, name: String): Option[String] =
+    s.chain.reverseIterator.flatMap(c =>
+      if (c.version == s.version) s.meta(name)
+      else readMeta(s.root, c.version, name)).nextOption()
 
   /** One committed snapshot's chain record. */
   private[graft] case class CommitInfo(version: Long, prev: Option[Long],
@@ -438,36 +570,12 @@ object VersionedTable {
     * history can never surface a never-committed snapshot that
     * `versions()`'s raw listing would. The walk stops at a vacuumed
     * (missing) predecessor; pre-`_prev` snapshots end the walk
-    * conservatively by including themselves. */
-  /** Committed-chain memo, keyed (root, tip version, tip-dir mtime):
-    * the chain BELOW a fixed tip is immutable (history is append-only;
-    * commit meta files are stamped before the marker publishes), so a
-    * hit replaces the whole 3-reads-per-version walk with one stat —
-    * the same write-once argument as the schema memo, applied to the
-    * ~500-800 commit-meta reads a multi-commit fixture paid (r16
-    * verdict item 3). The tip mtime guards a dropped-and-recreated
-    * root; vacuum clears the cache when it removes versions (the one
-    * in-engine operation that edits history under an unchanged tip). */
-  private val chainCache = new Lru[(String, Long, Long), Seq[CommitInfo]](4096)
-
+    * conservatively by including themselves. The live snapshot holds
+    * it; a new tip's resolve extends its predecessor's chain. */
   private[graft] def committedChain(root: String,
-                                    useCheckpoint: Boolean = true): Seq[CommitInfo] = {
-    if (!useCheckpoint)
-      return chainWalk(root, useCheckpoint = false, latestVersion(root))
-    latestVersion(root) match {
-      case None => Nil
-      case Some(tip) =>
-        val tp = new HPath(s"$root/v=$tip")
-        val mtime = try fcOf(tp).getFileStatus(tp).getModificationTime
-          catch { case scala.util.control.NonFatal(_) => -1L }
-        val key = (root, tip, mtime)
-        chainCache.get(key).getOrElse {
-          val c = chainWalk(root, useCheckpoint = true, Some(tip))
-          chainCache.put(key, c)
-          c
-        }
-    }
-  }
+                                    useCheckpoint: Boolean = true): Seq[CommitInfo] =
+    if (!useCheckpoint) chainWalk(root, useCheckpoint = false, latestVersion(root))
+    else latestSnapshot(root).map(_.chain).getOrElse(Nil)
 
   private def chainWalk(root: String, useCheckpoint: Boolean,
                         tip: Option[Long]): Seq[CommitInfo] = {
@@ -477,34 +585,23 @@ object VersionedTable {
     var cur = tip
     while (cur.isDefined) {
       val v = cur.get
-      // a PREVIOUS tip's memoized chain is a valid prefix (history
-      // below a committed version is immutable; vacuum invalidates,
-      // and the mtime in the key guards a recreated root) — splice it
-      // like an in-memory checkpoint, so a table that just committed
-      // pays the walk only for its NEW hop, not the whole history
+      // a cached snapshot's chain is a valid prefix (history below a
+      // committed version is immutable; vacuum invalidates) — splice it
+      // like an in-memory checkpoint
       val memo: Option[Seq[CommitInfo]] =
-        if (!useCheckpoint || chain.exists(_.version == v)) None
-        else {
-          val vp = new HPath(s"$root/v=$v")
-          val mtime = try fcOf(vp).getFileStatus(vp).getModificationTime
-            catch { case scala.util.control.NonFatal(_) => -1L }
-          chainCache.get((root, v, mtime))
-        }
-      memo match {
-        case Some(prefix) =>
+        if (!useCheckpoint) None else cachedSnapshot(root, v).map(_.chain)
+      (memo, cpIdx.get(v)) match {
+        case (Some(prefix), _) =>
           chain = prefix.toList ::: chain
           cur = None
-        case None =>
-      cpIdx.get(v) match {
-        case Some(i) => // checkpointed prefix covers v and everything before
+        case (None, Some(i)) => // checkpointed prefix covers v and before
           chain = cp.take(i + 1).toList ::: chain
           cur = None
-        case None =>
+        case (None, None) =>
           val info = commitInfoOf(root, v)
           chain = info :: chain
           cur = info.prev.filter(p =>
             fcOf(new HPath(s"$root/v=$p")).util.exists(new HPath(s"$root/v=$p")))
-      }
       }
     }
     chain
@@ -512,22 +609,6 @@ object VersionedTable {
 
   def committedVersions(root: String): Seq[Long] =
     committedChain(root).map(_.version)
-
-  /** `_operation` of a committed version, served from the chain memo
-    * (no metadata read on a cache hit); falls back to the direct read
-    * for a version the chain does not reach (pre-`_prev` history). */
-  private[sources] def operationOf(root: String, v: Long): Option[String] =
-    committedChain(root).find(_.version == v).map(_.operation.trim)
-      .orElse(readMeta(root, v, "_operation").map(_.trim))
-
-  /** `_prev` of a committed version, from the chain memo; off-chain
-    * versions fall back to the direct read. */
-  private[sources] def prevOf(root: String, v: Long): Option[Long] =
-    committedChain(root).find(_.version == v) match {
-      case Some(c) => c.prev
-      case None =>
-        readMeta(root, v, "_prev").filter(_ != "none").map(_.trim.toLong)
-    }
 
   /** Schema gate (the reference's enforced-StructType contract,
     * 01_bronze_ingest.py:36-68 / README.md:69): an existing table only
@@ -1006,25 +1087,6 @@ object VersionedTable {
       }
     }
 
-  /** The newest `_colmap` at or below logical snapshot `version` —
-    * cumulative, so the first one found on the newest-first chain walk
-    * is authoritative. None = unmapped (identity). Follows shallow-clone
-    * jumps like every chain walk. */
-  private[graft] def colmapAt(root: String, version: Long): Option[Colmap] = {
-    var cur: Option[(String, Long)] = Some((root, version))
-    while (cur.isDefined) {
-      val (r, v) = cur.get
-      readMeta(r, v, "_colmap") match { // memoized commit meta
-        case Some(s) => return Some(parseColmap(s))
-        case None => cur = dataLink(r, v)
-      }
-    }
-    None
-  }
-
-  private[graft] def hasColmap(root: String, version: Long): Boolean =
-    colmapAt(root, version).isDefined
-
   /** Physical→logical projection: select each mapped physical column
     * under its logical name, in mapping order (dropped physicals simply
     * fall out of the projection). */
@@ -1052,11 +1114,12 @@ object VersionedTable {
       s"$root: $op requires column mapping — run ALTER TABLE … SET " +
         "TBLPROPERTIES ('gvt.columnMapping' = 'name') (or 'id') first " +
         "(the Delta columnMapping.mode contract)")
-    val live = readVersion(spark, root, base)
-    val cm0 = ensureIds(colmapAt(root, base).getOrElse(
+    val snap = snapshot(root, base)
+    val live = readSnapshot(spark, snap)
+    val cm0 = ensureIds(snap.colmap.getOrElse(
       Colmap(live.columns.toSeq.map(c => (c, c)), Set.empty)), root)
     val act = cm0.active.toMap
-    val parts = layoutOf(root, base)
+    val parts = snap.layout
     val refs = (constraints(root).values ++ generatedColumns(root).values ++
       generatedColumns(root).keys ++ identityColumns(root).keys).toSeq
     cols.foreach { c =>
@@ -1293,14 +1356,17 @@ object VersionedTable {
             optimizeWrite: Option[Boolean] = None,
             replaceSchema: Boolean = false): Long = {
     val base = baseVersion.orElse(latestVersion(root))
+    // the one snapshot this commit derives from
+    val baseSnap = base.map(snapshot(root, _))
     // protocol: refuse when the table demands features this build lacks;
     // then declare the features THIS commit materializes BEFORE anything
     // publishes, so no reader can see their bytes ungated
-    checkWriteProtocol(root)
+    var proto = checkWriteProtocol(root,
+      baseSnap.map(_.protocol).getOrElse(noProtocol))
     if (metaFiles.contains("_dv_parent") || subdirWrites.contains("_dv"))
-      requireFeature(root, "dv", reader = true)
+      proto = requireFeature(root, "dv", reader = true, proto)
     if (metaFiles.contains("_schema_only"))
-      requireFeature(root, "schemaOnlySlices", reader = true)
+      proto = requireFeature(root, "schemaOnlySlices", reader = true, proto)
     // `physicalInput` (compactChain's fold): the frame is the table's
     // own committed files read back in PHYSICAL column space — schema /
     // constraint / generated-column gates already passed when those rows
@@ -1317,10 +1383,9 @@ object VersionedTable {
     val existingSchema: Option[StructType] =
       if (physicalInput) None
       else try latestVersion(root).map(v =>
-        // memoized logical schema — building the full chain-read plan
-        // (per-dir inference + DV anti-join analysis) just to take its
-        // .schema was pure driver latency on EVERY commit
-        schemaOf(df0.sparkSession, root, v))
+        // the snapshot's logical schema — building the full chain-read
+        // plan just to take its .schema is pure driver latency
+        baseSnap.filter(_.version == v).getOrElse(snapshot(root, v)).schema)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
           throw new ConcurrentWriteException(
@@ -1377,8 +1442,9 @@ object VersionedTable {
     val cmPrior: Option[Colmap] =
       if (physicalInput || unmap) None
       else metaFiles.get("_colmap").map(parseColmap)
-        .orElse(base.flatMap(b => colmapAt(root, b)))
-    if (cmPrior.isDefined) requireFeature(root, "columnMapping", reader = true)
+        .orElse(baseSnap.flatMap(_.colmap))
+    if (cmPrior.isDefined)
+      proto = requireFeature(root, "columnMapping", reader = true, proto)
     // `gvt.dataSkippingCols` (Delta auto-data-skipping analogue): when
     // the property names columns and the caller passed no statsCols,
     // EVERY data commit collects their zone maps — DML slices and
@@ -1480,7 +1546,7 @@ object VersionedTable {
           dfW.limit(0).write.mode("overwrite").parquet(s"$root/v=$next")
           metaW2 = metaW + ("_schema_only" -> "1",
             "_layout" -> partsW.mkString(","))
-          requireFeature(root, "schemaOnlySlices", reader = true)
+          proto = requireFeature(root, "schemaOnlySlices", reader = true, proto)
         }
       }
       // a schema-only slice (a DELETE_DV commit's empty anchor) carries
@@ -1800,7 +1866,7 @@ object VersionedTable {
     require(ranges.nonEmpty, "readPruned needs at least one (column, lo, hi)")
     val v = latestVersion(root).getOrElse(
       throw new IllegalArgumentException(s"no versions at $root"))
-    ranges.foldLeft(prunedVersionRead(spark, root, v, ranges)) {
+    ranges.foldLeft(prunedVersionRead(spark, snapshot(root, v), ranges)) {
       case (df, (c, lo, hi)) => df.filter(col(c) >= lo && col(c) <= hi)
     }
   }
@@ -1817,20 +1883,19 @@ object VersionedTable {
     * build their `_dv` payload). Empty `ranges` = no pruning (the
     * plain chain read). PARTIAL pruning per chain member: a dir
     * without stats for every range column is read WHOLE. */
-  private[graft] def prunedVersionRead(spark: SparkSession, root: String,
-                                       version: Long,
+  private[graft] def prunedVersionRead(spark: SparkSession, snap: Snapshot,
                                        ranges: Seq[(String, Double, Double)],
                                        keepMeta: Boolean = false,
                                        strRanges: Seq[(String, Option[String], Option[String])] = Seq.empty)
       : DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val dirs = dataDirsOf(root, version)
-    val dvDirs = chainDvDirs(root, version)
+    val dirs = snap.dataDirs
+    val dvDirs = snap.dvDirs
     val needMeta = dvDirs.nonEmpty || keepMeta
     // column-mapped chain: callers speak LOGICAL names — stats and
     // footers are keyed physical, so the range columns translate on the
     // way in and the result projects back to logical on the way out
-    val cm = colmapAt(root, version)
+    val cm = snap.colmap
     val phys = cm.map(_.active.toMap).getOrElse(Map.empty[String, String])
     val rangesP = ranges.map { case (c, lo, hi) =>
       (phys.getOrElse(c, c), lo, hi) }
@@ -1843,10 +1908,10 @@ object VersionedTable {
         else tagged
       logicalize(if (keepMeta) dv else dv.drop("__gvt_file", "__gvt_pos"))
     }
-    lazy val elided = fullyMaskedFiles(spark, dvDirs)
+    lazy val elided = snap.elided
     def full(): DataFrame =
-      if (!needMeta) logicalize(readDirs(spark, dirs))
-      else finish(readDirsMetaEliding(spark, dirs, elided))
+      if (!needMeta) logicalize(readDirs(spark, dirs, Some(snap.flat)))
+      else finish(readDirsMetaEliding(spark, snap))
     if (ranges.isEmpty && strRanges.isEmpty) return full()
     // per-dir stats coverage (a multi-dir stats read would silently
     // NULL-fill a member's missing column and mis-skip its files — so
@@ -1861,11 +1926,8 @@ object VersionedTable {
       }
     }
     if (statted.isEmpty) return full()
-    val partitioned = dirsLayout(dirs).nonEmpty
-    def tag(df: DataFrame): DataFrame =
-      if (!needMeta) df
-      else df.select(col("*"), col("_metadata.file_path").as("__gvt_file"),
-        col("_metadata.row_index").as("__gvt_pos"))
+    val partitioned = snap.dirLayout.nonEmpty
+    def tag(df: DataFrame): DataFrame = if (needMeta) withRowIds(df) else df
     // NULL numeric stats = a file with no non-null values for the
     // column: no range predicate can match there, so the file is
     // skipped (sound — a row must satisfy the range to matter, and
@@ -1936,8 +1998,7 @@ object VersionedTable {
     // cost, and only on mapped chains)
     val anchor =
       if (cm.isEmpty) Seq.empty
-      else Seq((if (needMeta) readDirsMeta(spark, dirs)
-        else readDirs(spark, dirs)).limit(0))
+      else Seq(readDirs(spark, dirs, Some(snap.flat), tag).limit(0))
     // allowMissingColumns: an evolved chain's older members NULL-pad
     val unioned = (reads ++ anchor)
       .reduce(_.unionByName(_, allowMissingColumns = true))
@@ -2115,9 +2176,9 @@ object VersionedTable {
       num: Map[String, Map[String, (Double, Double)]],
       str: Map[String, Map[String, StrStats]])
 
-  private[graft] def fileStats(spark: SparkSession, root: String, version: Long)
+  private[graft] def fileStats(spark: SparkSession, snap: Snapshot)
       : Option[FileZoneMaps] = {
-    val dirs = dataDirsOf(root, version).filter { d =>
+    val dirs = snap.dataDirs.filter { d =>
       val p = new HPath(s"$d/_stats")
       fcOf(p).util.exists(p)
     }
@@ -2154,25 +2215,14 @@ object VersionedTable {
     * included; `_`/`.`-prefixed names (sidecars like `_stats`, `_bloom`,
     * `_dv`, commit markers, success files) excluded at every level.
     * Listing order is irrelevant to the callers (sums). */
-  private[graft] def listDataFiles(dir: String): Seq[String] = {
-    val p = new HPath(dir)
-    val fc = fcOf(p)
-    if (!fc.util.exists(p)) return Nil
-    def walk(d: HPath): List[String] =
-      fc.util.listStatus(d).toList.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else List(st.getPath.toString)
-      }
-    walk(p)
-  }
+  private[graft] def listDataFiles(dir: String): Seq[String] =
+    listDataFilesWithSize(dir).map(_._1)
 
   /** Total byte size of logical snapshot `version`'s data files
     * (sidecars and schema-only slices excluded) — the planner-facing
     * `sizeInBytes` of a chain snapshot. One filesystem listing per
     * chain dir; no data read. */
-  private[graft] def chainDataBytes(root: String, version: Long,
+  private[graft] def chainDataBytes(snap: Snapshot,
                                     excluding: Set[String] = Set.empty): Long = {
     def walk(d: HPath): Long = {
       val fc = fcOf(d)
@@ -2186,8 +2236,7 @@ object VersionedTable {
         else st.getLen
       }.sum
     }
-    dataDirsOf(root, version).filterNot(isSchemaOnlySlice)
-      .map(d => walk(new HPath(d))).sum
+    snap.dataBearingDirs.map(d => walk(new HPath(d))).sum
   }
 
   /** Sum of the parquet FOOTER row counts of `files` — exact row counts
@@ -2223,19 +2272,23 @@ object VersionedTable {
     * double-count a position). No Spark job, no data page read — the
     * cost is one footer read per file, same class as planning. */
   def metaRowCount(root: String, version: Option[Long] = None): Long = {
-    checkReadProtocol(root)
     val v = version.orElse(latestVersion(root)).getOrElse(
       throw new IllegalArgumentException(s"metaRowCount: no versions at $root"))
-    // a `_purged`-recorded file that is STILL present (the crash window
-    // between the record landing and the delete) must not count: its
-    // masks are fully represented in the DV sum AND in the purged
-    // correction, so including its footer would double-add its rows
-    val isPurged = purgedIn(root) // bind once: one _purged read, not O(files)
-    val dataFiles = dataDirsOf(root, v).filterNot(isSchemaOnlySlice)
-      .flatMap(listDataFiles).filterNot(isPurged)
-    val dvFiles = chainDvDirs(root, v).flatMap(listDataFiles)
-    footerRowCount(dataFiles) - footerRowCount(dvFiles) +
-      purgedMaskedRows(root, v)
+    liveRows(snapshot(root, v))._2
+  }
+
+  /** (raw footer rows, live rows) of a snapshot, from metadata alone. A
+    * `_purged`-recorded file that is STILL present (the crash window
+    * between the record landing and the delete) does not count: its
+    * masks are fully represented in the DV sum AND in the purged
+    * correction, so including its footer would double-add its rows. */
+  private def liveRows(snap: Snapshot): (Long, Long) = {
+    refuseUnknownReader(snap.root, snap.readerFeatures)
+    val isPurged = purgedIn(snap.root) // bind once: one _purged read
+    val raw = footerRowCount(snap.dataBearingDirs
+      .flatMap(listDataFiles).filterNot(isPurged))
+    (raw, raw - footerRowCount(snap.dvDirs.flatMap(listDataFiles)) +
+      purgedMaskedRows(snap))
   }
 
   /** Membership test against the root's `_purged` record, in
@@ -2251,10 +2304,10 @@ object VersionedTable {
     * row-count arithmetic adds them back. Scoped to files under THIS
     * chain's data dirs — a post-purge full rewrite (compact / REORG)
     * drops the old dirs and the correction with them. */
-  private def purgedMaskedRows(root: String, version: Long): Long = {
-    val dvDirs = chainDvDirs(root, version)
+  private def purgedMaskedRows(snap: Snapshot): Long = {
+    val dvDirs = snap.dvDirs
     if (dvDirs.isEmpty) return 0L
-    val dirs = dataDirsOf(root, version).map(d => normFileId(d) + "/")
+    val dirs = snap.dataDirs.map(d => normFileId(d) + "/")
     rootsOfDvDirs(dvDirs).flatMap(purgedEntries).collect {
       case (f, n) if dirs.exists(f.startsWith) => n
     }.sum
@@ -2277,17 +2330,10 @@ object VersionedTable {
     * lever: join order and broadcast selection on multi-fact queries
     * follow these sizes. Returns (version, rows, bytes). */
   def analyzeTable(spark: SparkSession, root: String): (Long, Long, Long) = {
-    checkReadProtocol(root)
-    val v = latestVersion(root).getOrElse(throw new IllegalArgumentException(
-      s"no versions at $root"))
-    val isPurged = purgedIn(root)
-    val dataFiles = dataDirsOf(root, v).filterNot(isSchemaOnlySlice)
-      .flatMap(listDataFiles).filterNot(isPurged)
-    val raw = footerRowCount(dataFiles)
-    val live = raw -
-      footerRowCount(chainDvDirs(root, v).flatMap(listDataFiles)) +
-      purgedMaskedRows(root, v)
-    val rawBytes = chainDataBytes(root, v)
+    val snap = liveSnapshot(root)
+    val v = snap.version
+    val (raw, live) = liveRows(snap)
+    val rawBytes = chainDataBytes(snap)
     val bytes = if (raw <= 0L) rawBytes
       else math.max(1L, (rawBytes.toDouble * live / raw).toLong)
     writeString(statsFile(root), s"$v\t$live\t$bytes", overwrite = true)
@@ -2333,9 +2379,9 @@ object VersionedTable {
     // the write path)
     val updates2 = applyGenerated(updates, generatedColumns(root))
     while (true) {
-      val base = latestVersion(root).getOrElse(
-        throw new IllegalArgumentException(s"no versions at $root"))
-      val target = readVersion(spark, root, base)
+      val snap = liveSnapshot(root)
+      val base = snap.version
+      val target = readSnapshot(spark, snap)
       // gate the CHANGESET schema up front (clear schema-enforcement error
       // instead of a unionByName analysis failure downstream)
       checkSchema(target.schema, updates2.schema, allowEvolution)
@@ -2348,7 +2394,7 @@ object VersionedTable {
         if (!cdfEnabled(root)) Map.empty[String, DataFrame]
         else Map("_cdf" -> keyDiff(target, merged, keys))
       try return write(merged, root, allowEvolution = allowEvolution,
-        partitionBy = layoutOf(root, base),
+        partitionBy = snap.layout,
         baseVersion = Some(base), operation = "MERGE", metaFiles = metaFiles,
         assignIdentity = false, subdirWrites = cdfRows)
       catch {
@@ -2389,9 +2435,9 @@ object VersionedTable {
     import org.apache.spark.sql.functions.lit
     var attempt = 0
     while (true) {
-      val base = latestVersion(root).getOrElse(
-        throw new IllegalArgumentException(s"no versions at $root"))
-      val target0 = readVersion(spark, root, base)
+      val snap = liveSnapshot(root)
+      val base = snap.version
+      val target0 = readSnapshot(spark, snap)
       val target =
         if (!allowEvolution) target0
         else source.schema.filterNot(f => target0.columns.contains(f.name))
@@ -2409,7 +2455,7 @@ object VersionedTable {
         if (!cdfEnabled(root)) Map.empty[String, DataFrame]
         else Map("_cdf" -> keyDiff(target, merged, keys))
       try return write(merged, root, baseVersion = Some(base),
-        partitionBy = layoutOf(root, base),
+        partitionBy = snap.layout,
         operation = "MERGE", assignIdentity = false,
         allowEvolution = allowEvolution,
         subdirWrites = cdfRows)
@@ -2437,11 +2483,11 @@ object VersionedTable {
                         locateJoins: Seq[LocateSemiJoin] = Seq.empty,
                         scalarJoins: Seq[LocateScalarJoin] = Seq.empty): Long = {
     import org.apache.spark.sql.functions.col
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
+    val snap = liveSnapshot(root)
+    val v = snap.version
     // locate scan zone-map-pruned by the bounds the predicate implies:
     // an O(changed) commit pays only O(pruned) read, not O(table)
-    val live = prunedVersionRead(spark, root, v,
+    val live = prunedVersionRead(spark, snap,
       predicateRanges(predicate), keepMeta = true,
       strRanges = predicateStrRanges(predicate))
     val cdf = cdfEnabled(root)
@@ -2481,7 +2527,7 @@ object VersionedTable {
       // on the rewritten rows, and the chain never mixes flat and hive
       // members. Updating a PARTITION column itself moves the row to
       // its new directory — also the Delta behavior.
-      write(updated, root, partitionBy = layoutOf(root, v),
+      write(updated, root, partitionBy = snap.layout,
         metaFiles = Map("_dv_parent" -> v.toString),
         subdirWrites = Map("_dv" -> dv) ++ cdfRows,
         baseVersion = Some(v), operation = "UPDATE_DV",
@@ -2505,8 +2551,8 @@ object VersionedTable {
                    predicate: org.apache.spark.sql.Column,
                    df0: DataFrame): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
+    val snap = liveSnapshot(root)
+    val v = snap.version
     // the validation scan below plus the write would compute an
     // expensive upstream `df0` TWICE — persist for the operation's span
     // (skipped if the caller already cached it)
@@ -2519,9 +2565,9 @@ object VersionedTable {
           s"$root: replaceWhere data contains rows NOT matching the " +
             "predicate — they would silently escape the replaced scope")
       // locate scan zone-map-pruned by the predicate's implied bounds
-      val live = prunedVersionRead(spark, root, v,
+      val live = prunedVersionRead(spark, snap,
         predicateRanges(predicate), keepMeta = true,
-      strRanges = predicateStrRanges(predicate))
+        strRanges = predicateStrRanges(predicate))
       val cdf = cdfEnabled(root)
       val hit0 = live.filter(predicate)
       val hit = if (!cdf) hit0
@@ -2543,7 +2589,7 @@ object VersionedTable {
         // keep the table's hive layout (see updateWhereVector): the
         // replacing batch lands in its partitions, never a flat dir
         // stacked on a hive chain
-        write(df, root, partitionBy = layoutOf(root, v),
+        write(df, root, partitionBy = snap.layout,
           metaFiles = Map("_dv_parent" -> v.toString),
           subdirWrites = Map("_dv" -> dv) ++ cdfRows,
           baseVersion = Some(v), operation = "REPLACE_WHERE")
@@ -2568,9 +2614,7 @@ object VersionedTable {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.{col, lit}
     require(dynCols.nonEmpty, "dynamicOverwrite: no dynamic partition columns")
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    val layout = layoutOf(root, v)
+    val layout = liveSnapshot(root).layout
     dynCols.foreach(k => require(layout.contains(k),
       s"$root: dynamic PARTITION column $k is not a hive layout column " +
         s"(${layout.mkString(", ")}) — only layout partitions can be " +
@@ -2633,11 +2677,11 @@ object VersionedTable {
     * exactly Delta's semantics. Returns the new version. */
   def deleteWhere(spark: SparkSession, root: String,
                   predicate: org.apache.spark.sql.Column): Long = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    write(readVersion(spark, root, v).filter(!predicate), root,
-      partitionBy = layoutOf(root, v),
-      baseVersion = Some(v), operation = "DELETE", assignIdentity = false)
+    val snap = liveSnapshot(root)
+    write(readSnapshot(spark, snap).filter(!predicate), root,
+      partitionBy = snap.layout,
+      baseVersion = Some(snap.version), operation = "DELETE",
+      assignIdentity = false)
   }
 
   /** Row-level UPDATE (Delta `UPDATE t SET c = e WHERE p` analogue):
@@ -2648,18 +2692,17 @@ object VersionedTable {
                   predicate: org.apache.spark.sql.Column,
                   assignments: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.{col, when}
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    val snap = readVersion(spark, root, v)
+    val snap = liveSnapshot(root)
+    val rows = readSnapshot(spark, snap)
     // simultaneous assignment — see updateWhereVector
-    assignments.keys.foreach(c => require(snap.columns.contains(c),
+    assignments.keys.foreach(c => require(rows.columns.contains(c),
       s"UPDATE assigns unknown column $c"))
-    val updated = snap.select(snap.columns.map(c =>
+    val updated = rows.select(rows.columns.map(c =>
       assignments.get(c)
         .map(e => when(predicate, e).otherwise(col(c)).as(c))
         .getOrElse(col(c))).toSeq: _*)
-    write(updated, root, partitionBy = layoutOf(root, v),
-      baseVersion = Some(v), operation = "UPDATE",
+    write(updated, root, partitionBy = snap.layout,
+      baseVersion = Some(snap.version), operation = "UPDATE",
       assignIdentity = false)
   }
 
@@ -2697,7 +2740,8 @@ object VersionedTable {
   def changes(spark: SparkSession, root: String, fromV: Long, toV: Long,
               keys: Seq[String] = Seq.empty): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    if (keys.isEmpty) return keylessChanges(spark, root, fromV, toV)
+    val to = snapshot(root, toV)
+    if (keys.isEmpty) return keylessChanges(spark, to, fromV)
     // a column-mapped chain's raw files carry PHYSICAL names — the
     // O(batch)/O(changed) fast paths below read files directly, so a
     // mapped chain's frames are translated physical→logical through
@@ -2707,8 +2751,8 @@ object VersionedTable {
     // reused): a physical outside toV's active set is a dropped column
     // (excluded — the feed emits toV's schema), a physical an old batch
     // lacks reads NULL (exactly its value at toV).
-    appendDeltaDirs(root, fromV, toV).foreach { dirs =>
-      val delta = mapToLogical(spark, readDirs(spark, dirs), root, toV)
+    appendDeltaDirs(to, fromV).foreach { dirs =>
+      val delta = mapToLogical(spark, readDirs(spark, dirs), to)
       val dataCols = delta.columns.filterNot(keys.contains).toSeq
       return delta.select(keys.map(col) ++ dataCols.map(col) :+
         lit("insert").as("_change_type"): _*)
@@ -2720,9 +2764,9 @@ object VersionedTable {
     // never a base rescan. Per-commit drains (ChangeFeed.commitFeeds,
     // the gvt-cdf source) are always single hops, so the whole DML
     // family now feeds consumers at O(changed), like the append path.
-    if (readMeta(root, toV, "_dv_parent").map(_.trim.toLong).contains(fromV))
-      return dvCommitChanges(spark, root, fromV, toV, keys)
-    keyDiff(readVersion(spark, root, fromV), readVersion(spark, root, toV), keys)
+    if (to.meta("_dv_parent").map(_.trim.toLong).contains(fromV))
+      return dvCommitChanges(spark, to, fromV, keys)
+    keyDiff(readVersion(spark, root, fromV), readSnapshot(spark, to), keys)
   }
 
   /** KEYLESS change feed (Delta parity: Delta's `table_changes` takes no
@@ -2740,21 +2784,22 @@ object VersionedTable {
     *    pre/post pairing needs either user keys or the commit-time
     *    sidecar; a silently mis-paired feed would corrupt downstream
     *    incremental state. */
-  private def keylessChanges(spark: SparkSession, root: String,
-                             fromV: Long, toV: Long): DataFrame = {
+  private def keylessChanges(spark: SparkSession, to: Snapshot,
+                             fromV: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    appendDeltaDirs(root, fromV, toV).foreach { dirs =>
-      val delta = mapToLogical(spark, readDirs(spark, dirs), root, toV)
+    val (root, toV) = (to.root, to.version)
+    appendDeltaDirs(to, fromV).foreach { dirs =>
+      val delta = mapToLogical(spark, readDirs(spark, dirs), to)
       return delta.select(delta.columns.map(col).toSeq :+
         lit("insert").as("_change_type"): _*)
     }
-    val op = operationOf(root, toV).getOrElse("")
+    val op = to.chain.last.operation.trim
     // compaction-family hops (COMPACT / OPTIMIZE … WHERE) rewrite
     // content-identically — Delta's CDF contract: an OPTIMIZE commit
     // emits NO changes (a keyed diff would pair everything away; the
     // keyless feed short-circuits to the same answer without the scan)
     if (op.startsWith("COMPACT") || op.startsWith("OPTIMIZE"))
-      return emptySnapshot(spark, root, toV)
+      return emptySnapshot(spark, to)
         .withColumn("_change_type", lit("insert"))
     def refuse(): Nothing = throw new ChangeFeedUnavailable(
       s"$root: keyless table_changes across v=$fromV→v=$toV ($op) — this " +
@@ -2762,18 +2807,18 @@ object VersionedTable {
         "columns, or set TBLPROPERTIES ('gvt.enableChangeDataFeed'='true') " +
         "before the DML commits so the feed is captured at write time " +
         "(Delta's CDC-file contract)")
-    if (readMeta(root, toV, "_dv_parent").map(_.trim.toLong).contains(fromV)) {
+    if (to.meta("_dv_parent").map(_.trim.toLong).contains(fromV)) {
       val cdfDir = new HPath(s"$root/v=$toV/_cdf")
       if (fcOf(cdfDir).util.exists(cdfDir))
         return readDirCached(spark, cdfDir.toString)
       if (op.startsWith("DELETE_DV"))
-        return dvRemovedRows(spark, root, fromV, toV)
+        return dvRemovedRows(spark, to, fromV)
           .withColumn("_change_type", lit("delete"))
       if (op.startsWith("REPLACE_WHERE"))
-        return dvRemovedRows(spark, root, fromV, toV)
+        return dvRemovedRows(spark, to, fromV)
           .withColumn("_change_type", lit("delete"))
           .unionByName(
-            mapToLogical(spark, readDirCached(spark, s"$root/v=$toV"), root, toV)
+            mapToLogical(spark, readDirCached(spark, s"$root/v=$toV"), to)
               .withColumn("_change_type", lit("insert")),
             allowMissingColumns = true)
       refuse()
@@ -2782,7 +2827,7 @@ object VersionedTable {
     // single-hop only (fromV must be the commit's predecessor; per-commit
     // drains, the ChangeFeed shape, always are)
     val cdfDir = new HPath(s"$root/v=$toV/_cdf")
-    if (prevOf(root, toV).contains(fromV) &&
+    if (to.chain.last.prev.contains(fromV) &&
         fcOf(cdfDir).util.exists(cdfDir))
       return readDirCached(spark, cdfDir.toString)
     refuse()
@@ -2806,8 +2851,9 @@ object VersionedTable {
     committedChain(root).foreach { c =>
       val v = c.version
       val op = c.operation.trim
-      val fromV = readMeta(root, v, "_dv_parent").map(_.trim.toLong)
       val cdfDir = new HPath(s"$root/v=$v/_cdf")
+      lazy val to = snapshot(root, v)
+      lazy val fromV = to.meta("_dv_parent").map(_.trim.toLong)
       if (op.startsWith("UPDATE_DV") && fromV.isDefined &&
           !fcOf(cdfDir).util.exists(cdfDir)) {
         // a hop whose touched files VACUUM already reclaimed (or whose
@@ -2817,10 +2863,10 @@ object VersionedTable {
         // hop still backfills, and future commits capture at write
         // time (the Delta forward-only floor, as the worst case)
         try {
-          val pre = dvRemovedRows(spark, root, fromV.get, v)
+          val pre = dvRemovedRows(spark, to, fromV.get)
             .withColumn("_change_type", lit("update_preimage"))
           val post = mapToLogical(spark,
-            readDirCached(spark, s"$root/v=$v"), root, v)
+            readDirCached(spark, s"$root/v=$v"), to)
             .withColumn("_change_type", lit("update_postimage"))
           pre.unionByName(post, allowMissingColumns = true)
             .write.mode("overwrite").parquet(cdfDir.toString)
@@ -2834,15 +2880,18 @@ object VersionedTable {
         }
       }
     }
+    // the sidecars landed in OLD version dirs under an unchanged tip
+    if (done.nonEmpty) invalidate(Some(root))
     done.toSeq
   }
 
   /** The rows a DV hop removed, read from the TOUCHED FILES ONLY and
     * translated to `toV`'s logical schema — the dvCommitChanges
     * restriction, factored for the keyless paths. */
-  private def dvRemovedRows(spark: SparkSession, root: String,
-                            fromV: Long, toV: Long): DataFrame = {
+  private def dvRemovedRows(spark: SparkSession, to: Snapshot,
+                            fromV: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
+    val (root, toV) = (to.root, to.version)
     val dv = readDirCached(spark, s"$root/v=$toV/_dv")
     val files = dv.select("_dv_file").distinct()
       .collect().map(_.getString(0)).toSeq
@@ -2859,20 +2908,17 @@ object VersionedTable {
             "sink (full refresh)")
     }
     val old =
-      if (files.isEmpty) emptySnapshot(spark, root, fromV)
+      if (files.isEmpty) emptySnapshot(spark, snapshot(root, fromV))
       else {
-        def tag(df: DataFrame) = df.select(col("*"),
-          col("_metadata.file_path").as("__gvt_file"),
-          col("_metadata.row_index").as("__gvt_pos"))
-        val partitioned = layoutOf(root, fromV).nonEmpty
-        val reads = readFileGroups(spark, files, partitioned, tag)
+        val partitioned = snapshot(root, fromV).layout.nonEmpty
+        val reads = readFileGroups(spark, files, partitioned, withRowIds)
         val tagged = reads.reduce(_.unionByName(_, allowMissingColumns = true))
         tagged.join(dv,
           tagged("__gvt_file") === dv("_dv_file") &&
             tagged("__gvt_pos") === dv("_dv_pos"), "left_semi")
           .drop("__gvt_file", "__gvt_pos")
       }
-    mapToLogical(spark, old, root, toV)
+    mapToLogical(spark, old, to)
   }
 
   /** Translate a raw (physical-name) frame into `version`'s LOGICAL
@@ -2882,14 +2928,13 @@ object VersionedTable {
     * at `version` IS null); physicals outside the active set (dropped
     * columns) fall out. Identity on unmapped chains. */
   private def mapToLogical(spark: SparkSession, raw: DataFrame,
-                           root: String, version: Long): DataFrame =
-    colmapAt(root, version) match {
+                           snap: Snapshot): DataFrame =
+    snap.colmap match {
       case None => raw
       case Some(cm) =>
         import org.apache.spark.sql.functions.{col, lit}
         val have = raw.columns.toSet
-        val logicalTypes = readVersion(spark, root, version).schema
-          .map(f => f.name -> f.dataType).toMap
+        val logicalTypes = snap.schema.map(f => f.name -> f.dataType).toMap
         raw.select(cm.active.map { case (l, p) =>
           (if (have(p)) col(p) else lit(null).cast(logicalTypes(l))).as(l)
         }: _*)
@@ -2938,13 +2983,13 @@ object VersionedTable {
     * earlier vector can intersect). DELETE_DV → deletes; UPDATE_DV →
     * preimage/postimage pairs; REPLACE_WHERE → the mix its key overlap
     * implies. Cost: O(touched files + slice), at any table size. */
-  private def dvCommitChanges(spark: SparkSession, root: String,
-                              fromV: Long, toV: Long,
-                              keys: Seq[String]): DataFrame =
+  private def dvCommitChanges(spark: SparkSession, to: Snapshot,
+                              fromV: Long, keys: Seq[String]): DataFrame =
     // mapped chains: both restricted sets translate physical→logical
     // (a DV commit never changes the mapping, so toV's applies to both)
-    keyDiff(dvRemovedRows(spark, root, fromV, toV),
-      mapToLogical(spark, readDirCached(spark, s"$root/v=$toV"), root, toV), keys)
+    keyDiff(dvRemovedRows(spark, to, fromV),
+      mapToLogical(spark, readDirCached(spark, s"${to.root}/v=${to.version}"),
+        to), keys)
 
   // ── Append commits (Delta add-file-only transaction analogue) ────────
   //
@@ -2982,10 +3027,10 @@ object VersionedTable {
              allowEvolution: Boolean = false,
              operation: String = "APPEND",
              optimizeWrite: Option[Boolean] = None): Long = {
-    val base = latestVersion(root).getOrElse(throw new IllegalArgumentException(
+    val snap = latestSnapshot(root).getOrElse(throw new IllegalArgumentException(
       s"append requires an existing table at $root (first write creates it)"))
-    val parts = layoutOf(root, base)
-    write(df, root, partitionBy = parts, allowEvolution = allowEvolution,
+    val base = snap.version
+    write(df, root, partitionBy = snap.layout, allowEvolution = allowEvolution,
       metaFiles = metaFiles + ("_parent" -> base.toString),
       statsCols = statsCols, baseVersion = Some(base), operation = operation,
       optimizeWrite = optimizeWrite)
@@ -2996,12 +3041,13 @@ object VersionedTable {
     * was an APPEND off the same chain. None when any link is missing
     * (a full write / DELETE / UPDATE / compaction broke the chain) —
     * callers fall back to the two-snapshot diff. */
-  private def appendDeltaDirs(root: String, fromV: Long,
-                              toV: Long): Option[Seq[String]] = {
+  private def appendDeltaDirs(to: Snapshot, fromV: Long): Option[Seq[String]] = {
+    val root = to.root
     var dirs = List.empty[String]
-    var cur = toV
+    var cur = to.version
     while (cur != fromV) {
-      readMeta(root, cur, "_parent").map(_.trim.toLong) match {
+      (if (cur == to.version) to.meta("_parent")
+       else readMeta(root, cur, "_parent")).map(_.trim.toLong) match {
         case Some(p) if p < cur => dirs = s"$root/v=$cur" :: dirs; cur = p
         case _ => return None
       }
@@ -3014,47 +3060,6 @@ object VersionedTable {
   private def chainLink(root: String, v: Long): Option[Long] =
     readMeta(root, v, "_parent").orElse(readMeta(root, v, "_dv_parent"))
       .map(_.trim.toLong)
-
-  /** A SHALLOW clone commit's source pointer: (sourceRoot, version). */
-  private def cloneSrcOf(root: String, v: Long): Option[(String, Long)] =
-    readMeta(root, v, "_clone_src").map(_.split('\t')).collect {
-      case Array(sr, sv) => (sr, sv.trim.toLong)
-    }
-
-  /** The next hop of the DATA chain, across roots: `_parent` /
-    * `_dv_parent` within the table, or a shallow clone's `_clone_src`
-    * jump into its source table's chain. */
-  private def dataLink(root: String, v: Long): Option[(String, Long)] =
-    chainLink(root, v).map(p => (root, p)).orElse(cloneSrcOf(root, v))
-
-  /** True for a footer-only slice (ADD COLUMNS' zero-row schema
-    * carrier): file-index readers skip such dirs — they hold no rows
-    * and, written flat on partitioned tables, no partition layout. */
-  private[graft] def isSchemaOnlySlice(dir: String): Boolean =
-    readSideFile(new HPath(dir, "_schema_only")).isDefined
-
-  /** The table's hive partition layout at `version`: derived from the
-    * first DATA-bearing chain dir's directory names. A chain that is
-    * ALL schema-only slices (a freshly `CREATE TABLE`d table, possibly
-    * plus schema DDL, before its first row arrives) has no directories
-    * to derive from — the DECLARED layout rides the create/truncate
-    * commit's `_layout` meta instead. */
-  private[graft] def layoutOf(root: String, version: Long): Seq[String] = {
-    val dirs = dataDirsOf(root, version)
-    dirs.find(d => !isSchemaOnlySlice(d)) match {
-      case Some(d) => partColsOf(new HPath(d))
-      case None => readMetaLatest(root, "_layout")
-        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Seq.empty)
-    }
-  }
-
-  /** [[layoutOf]] over an already-resolved dir chain (read paths that
-    * hold the dirs, not the version). Declared-layout fallback is not
-    * needed here: with zero data dirs there is nothing to lay out. */
-  private[graft] def dirsLayout(dirs: Seq[String]): Seq[String] =
-    dirs.find(d => !isSchemaOnlySlice(d))
-      .map(d => partColsOf(new HPath(d))).getOrElse(Seq.empty)
 
   // ── Protocol feature gates (Delta minReaderVersion/minWriterVersion
   //    analogue) ──────────────────────────────────────────────────────
@@ -3093,46 +3098,41 @@ object VersionedTable {
   // RESOLUTION COST: entries are immutable once written (putIfAbsent)
   // and the chain is append-only, never vacuumed, and GAPLESS (a CAS
   // loser retries at the refreshed tip+1), so the newest entry is
-  // discoverable by FORWARD PROBE from a cached tip — one existence
-  // read past the tip per check, ZERO root listings. Before this, every
-  // snapshot resolve paid a full root LIST per protocol check (2+ per
-  // write commit) — on an object store that is round-trips, and it was
-  // the measured regression on the write-then-read microbenchmarks. The
-  // common plain-table case is one cached miss probe of `_protocol.v1`.
-  // A cached tip can only be BEHIND the truth (entries are never
-  // removed), and the probe recovers forward, so the cache is sound
-  // across sessions and concurrent registrars.
-  private val protocolTips = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, (Set[String], Set[String]))]()
+  // discoverable by FORWARD PROBE from any known tip — one existence
+  // read past the tip per check, ZERO root listings. A snapshot records
+  // the tip it saw; a known tip can only be BEHIND the truth (entries
+  // are never removed), and the probe recovers forward. Readers of a
+  // snapshot gate on the features recorded when it resolved: a feature
+  // materializes in the commit that needs it, so an older snapshot's
+  // bytes never depend on a later entry.
 
-  /** Drop cached protocol tips — only needed if a test deletes and
-    * re-creates a table at the SAME root path within one JVM. */
-  private[graft] def invalidateProtocolCache(): Unit = protocolTips.clear()
-
-  /** Advance the cached tip monotonically (a slow CAS winner must never
-    * regress a higher tip another registrar already cached). */
-  private def cacheTip(root: String, n: Long,
-                       sets: (Set[String], Set[String])): Unit = {
-    protocolTips.merge(root, (n, sets),
-      (old, nw) => if (old._1 >= nw._1) old else nw)
-    ()
-  }
+  private val noProtocol: (Long, (Set[String], Set[String])) =
+    (0L, (Set.empty, Set.empty))
 
   /** The newest `_protocol` entry: (N, (reader, writer)), N=0 when the
-    * chain is empty. Forward probe from the cached tip. */
-  private def protocolTip(root: String): (Long, (Set[String], Set[String])) = {
-    val cached = Option(protocolTips.get(root))
-    var n = cached.map(_._1).getOrElse(0L)
-    var cur = cached.map(_._2).getOrElse((Set.empty[String], Set.empty[String]))
+    * chain is empty. Forward probe from the known tip `from`. */
+  private def probeProtocol(root: String, from: (Long, (Set[String], Set[String])))
+      : (Long, (Set[String], Set[String])) = {
+    var (n, cur) = from
     var next = readString(new HPath(root, s"_protocol.v${n + 1}"))
     while (next.isDefined) {
       n += 1
       cur = parseProtocol(next.get)
       next = readString(new HPath(root, s"_protocol.v${n + 1}"))
     }
-    if (n > 0) cacheTip(root, n, cur)
     (n, cur)
   }
+
+  /** The newest entry, probed forward from the live snapshot's tip when
+    * it is cached (a fresh resolve has just probed). */
+  private def protocolTip(root: String): (Long, (Set[String], Set[String])) =
+    latestVersion(root) match {
+      case None => probeProtocol(root, noProtocol)
+      case Some(v) => cachedSnapshot(root, v) match {
+        case Some(s) => probeProtocol(root, s.protocol)
+        case None => snapshot(root, v).protocol
+      }
+    }
 
   private def parseProtocol(s: String): (Set[String], Set[String]) = {
     val m = s.split('\n').toSeq.map(_.split('=')).collect {
@@ -3152,24 +3152,35 @@ object VersionedTable {
     * materializes, BEFORE the commit publishes, so no reader can
     * observe the feature's bytes without the protocol demanding it.
     * Monotone union via the CAS chain; a no-op when already recorded
-    * (the common case — one listing per materializing commit). */
+    * (the common case). */
   private[graft] def requireFeature(root: String, feature: String,
                                     reader: Boolean): Unit = {
+    requireFeature(root, feature, reader, protocolTip(root)); ()
+  }
+
+  /** [[requireFeature]] from a known tip; returns the tip after it. A
+    * feature the known tip already carries is recorded (entries are
+    * monotone) — no read at all. */
+  private def requireFeature(root: String, feature: String, reader: Boolean,
+                             from: (Long, (Set[String], Set[String])))
+      : (Long, (Set[String], Set[String])) = {
+    var tip = from
     var spins = 0
     while (spins < 32) {
-      val (n, (r, w)) = protocolTip(root)
+      val (n, (r, w)) = tip
       val (r2, w2) = (if (reader) r + feature else r, w + feature)
-      if (r2 == r && w2 == w) return // converged (the common case)
+      if (r2 == r && w2 == w) return tip // converged (the common case)
       val next = n + 1L
       try {
         writeString(new HPath(root, s"_protocol.v$next"),
           s"reader=${r2.toSeq.sorted.mkString(",")}\n" +
             s"writer=${w2.toSeq.sorted.mkString(",")}", overwrite = false)
-        cacheTip(root, next, (r2, w2))
-        return // we won the CAS: v<next> carries our union
+        return (next, (r2, w2)) // we won the CAS: v<next> carries our union
       } catch {
         case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          spins += 1 // another registrar advanced the chain — re-union
+          // another registrar advanced the chain — re-read and re-union
+          spins += 1
+          tip = probeProtocol(root, tip)
       }
     }
     throw new IllegalStateException(
@@ -3197,8 +3208,22 @@ object VersionedTable {
     * build does not understand (writing would corrupt invariants the
     * feature maintains — e.g. skip a CHECK constraint). One protocol
     * fetch checks both sides (a writer must also read). */
-  private[graft] def checkWriteProtocol(root: String): Unit = {
-    val (r, w) = protocolOf(root)
+  private[graft] def checkWriteProtocol(root: String): Unit =
+    refuseUnknownWriter(root, protocolOf(root))
+
+  /** [[checkWriteProtocol]] probing forward from a known tip (the
+    * commit's base snapshot); returns the tip it checked. */
+  private def checkWriteProtocol(root: String,
+                                 from: (Long, (Set[String], Set[String])))
+      : (Long, (Set[String], Set[String])) = {
+    val tip = probeProtocol(root, from)
+    refuseUnknownWriter(root, tip._2)
+    tip
+  }
+
+  private def refuseUnknownWriter(root: String,
+                                  features: (Set[String], Set[String])): Unit = {
+    val (r, w) = features
     refuseUnknownReader(root, r)
     val unknown = w -- supportedWriterFeatures
     if (unknown.nonEmpty) throw new UnsupportedOperationException(
@@ -3206,40 +3231,6 @@ object VersionedTable {
         s"${unknown.toSeq.sorted.mkString(", ")} that this build does " +
         "not support — writing could corrupt invariants those features " +
         "maintain; upgrade the library or write to a copy")
-  }
-
-  /** The data directories composing logical snapshot `version`,
-    * base-first: the `_parent`/`_dv_parent` chain down to the nearest
-    * full snapshot, following a shallow clone's `_clone_src` into the
-    * source table. A deletion-vector or clone commit's dir contributes
-    * only an empty schema slice — DV payloads are applied by
-    * [[readVersion]]. One metadata read per hop — compaction bounds the
-    * chain length. */
-  private[graft] def dataDirsOf(root: String, version: Long): Seq[String] = {
-    var dirs = List.empty[String]
-    var cur: Option[(String, Long)] = Some((root, version))
-    while (cur.isDefined) {
-      val (r, v) = cur.get
-      dirs = s"$r/v=$v" :: dirs
-      cur = dataLink(r, v)
-    }
-    dirs
-  }
-
-  /** The deletion-vector payload dirs in `version`'s chain (empty =
-    * no un-materialized deletes; compact() clears them). Shallow-clone
-    * jumps are followed — a clone of a DV-bearing snapshot reads the
-    * source's vectors. */
-  private[graft] def chainDvDirs(root: String, version: Long): Seq[String] = {
-    var dvs = List.empty[String]
-    var cur: Option[(String, Long)] = Some((root, version))
-    while (cur.isDefined) {
-      val (r, v) = cur.get
-      if (readMeta(r, v, "_dv_parent").isDefined)
-        dvs = s"$r/v=$v/_dv" :: dvs
-      cur = dataLink(r, v)
-    }
-    dvs
   }
 
   /** CLONE (Delta `CREATE TABLE … CLONE` analogue). `shallow = false`
@@ -3269,14 +3260,15 @@ object VersionedTable {
       // reader hitting the fresh clone can never resolve a DV-bearing
       // chain ungated (the root path needs no versions to carry a
       // protocol entry)
+      val src = snapshot(srcRoot, v)
       protocolOf(srcRoot)._1.foreach(f =>
         requireFeature(dstRoot, f, reader = true))
       // a mapped source's mapping rides the clone commit, so clone-local
       // reads and DML resolve it without crossing roots, and clone-local
       // schema changes stack independently of the source
-      write(emptySnapshot(spark, srcRoot, v), dstRoot,
+      write(emptySnapshot(spark, src), dstRoot,
         metaFiles = Map("_clone_src" -> s"$srcRoot\t$v") ++
-          colmapAt(srcRoot, v).map("_colmap" -> serializeColmap(_)),
+          src.colmap.map("_colmap" -> serializeColmap(_)),
         operation = s"CLONE(shallow,$srcRoot@v$v)")
     }
     else
@@ -3334,7 +3326,7 @@ object VersionedTable {
     * an existing table instead of each racing to be "the creating
     * write". A declared `partitionBy` cannot ride directory names yet
     * (there are no data files), so it rides the commit's `_layout`
-    * meta; [[layoutOf]] serves it to every layout consumer until the
+    * meta; [[Snapshot.layout]] serves it to every layout consumer until the
     * first data commit materializes the hive directories. Refuses an
     * already-versioned root (CREATE is never an overwrite). */
   def createTable(spark: SparkSession, root: String,
@@ -3422,10 +3414,11 @@ object VersionedTable {
   def widenColumnType(spark: SparkSession, root: String, name: String,
                       newType: org.apache.spark.sql.types.DataType): Long = {
     import org.apache.spark.sql.functions.col
-    val base = latestVersion(root).getOrElse(
+    val snap = latestSnapshot(root).getOrElse(
       throw new IllegalArgumentException(
         s"widenColumnType requires an existing table at $root"))
-    val live = readVersion(spark, root, base)
+    val base = snap.version
+    val live = readSnapshot(spark, snap)
     require(live.columns.contains(name), s"widenColumnType: no column $name " +
       s"in the live schema (${live.columns.mkString(", ")})")
     val oldType = live.schema(name).dataType
@@ -3435,7 +3428,7 @@ object VersionedTable {
         "widening — only upcasts are supported (narrowing would corrupt " +
         "existing rows); rewrite explicitly via overwrite if you really " +
         "mean it")
-    val parts = layoutOf(root, base)
+    val parts = snap.layout
     require(!parts.contains(name),
       s"widenColumnType: $name is a hive partition column (values live in " +
         "directory names) — change the layout via compact() instead")
@@ -3514,8 +3507,8 @@ object VersionedTable {
                          writerFeatures: Set[String] = Set.empty)
 
   def detail(root: String): TableDetail = {
-    val v = latestVersion(root).getOrElse(throw new IllegalArgumentException(
-      s"no versions at $root"))
+    val snap = liveSnapshot(root)
+    val v = snap.version
     def walk(p: HPath): Seq[(Long, Long)] = {
       val fc = fcOf(p)
       fc.util.listStatus(p).toSeq
@@ -3526,11 +3519,11 @@ object VersionedTable {
           else Seq((1L, st.getLen))
         }
     }
-    val counts = dataDirsOf(root, v).flatMap(d => walk(new HPath(d)))
-    TableDetail("gvt", root, v, committedVersions(root).size.toLong,
+    val counts = snap.dataDirs.flatMap(d => walk(new HPath(d)))
+    TableDetail("gvt", root, v, snap.chain.size.toLong,
       counts.map(_._1).sum, counts.map(_._2).sum,
-      metaRowCount(root, Some(v)), // footer counts − DV cardinality
-      layoutOf(root, v),
+      liveRows(snap)._2, // footer counts − DV cardinality
+      snap.layout,
       constraints(root), tblProperties(root),
       protocolOf(root)._1, protocolOf(root)._2)
   }
@@ -3539,36 +3532,33 @@ object VersionedTable {
     readVersion(spark, root, latestVersion(root).getOrElse(
       throw new IllegalArgumentException(s"no versions at $root")))
 
-  private val schemaCache =
-    new Lru[(String, Long, Long), org.apache.spark.sql.types.StructType](4096)
-
-  // ── Per-directory parquet schema memo ───────────────────────────────
+  // ── File memo ───────────────────────────────────────────────────────
   //
-  // EVERY `spark.read.parquet(dir)` construction pays schema inference:
-  // a driver-side listing plus a footer-reading Spark job (~25ms each,
-  // observed 50+ per multi-commit fixture query — guide §1 profiling).
-  // Version dirs are write-once (a commit publishes only after its dir
-  // is complete; vacuum's file-granular purge deletes whole files but
-  // never changes surviving footers, so the SCHEMA stays valid), and
-  // the testdata drops are immutable within a run — so the inferred
-  // schema is a per-(dir, mtime) constant, exactly the [[schemaOf]]
-  // contract one level down. Readers pass the memoized schema
-  // explicitly, which skips the inference job outright (guide §6:
-  // metadata cost is driver-side, single-threaded, and repeated).
+  // The one memo below snapshots, for facts about plain parquet paths:
+  //  - a directory's inferred schema, keyed (path, [[dirFingerprint]]).
+  //    EVERY `spark.read.parquet(dir)` construction otherwise pays
+  //    schema inference (a listing plus a footer-reading Spark job);
+  //    readers pass the memoized schema explicitly and skip it. Version
+  //    dirs are write-once (their mtime keys them); the testdata drops
+  //    and the medallion layers' `readParquetDir` targets are
+  //    rewritable, so their child listing folds into the key;
+  //  - a data file's footer row count, keyed (path, [[footerKey]]) —
+  //    data files are immutable.
+  // Snapshot invalidation drops the entries under the invalidated root.
 
-  private val dirSchemaCache =
-    new Lru[(String, Long), org.apache.spark.sql.types.StructType](8192)
+  private val fileMemo =
+    new Lru[(String, Long), Either[StructType, Long]](65536)
+  private val footerKey = Long.MinValue
 
   /** Inferred schema of one parquet directory, memoized on
-    * (path, [[dirFingerprint]]) — version-dir mtime for write-once
-    * dirs, a child-listing fold for rewritable ones. Hive-partitioned
-    * dirs include their partition columns, as plain inference would. */
+    * (path, [[dirFingerprint]]). Hive-partitioned dirs include their
+    * partition columns, as plain inference would. */
   private[graft] def parquetDirSchema(spark: SparkSession,
                                       d: String): org.apache.spark.sql.types.StructType = {
     val key = (d, dirFingerprint(new HPath(d)))
-    dirSchemaCache.get(key).getOrElse {
+    fileMemo.get(key).collect { case Left(s) => s }.getOrElse {
       val s = footerSparkSchema(d).getOrElse(spark.read.parquet(d).schema)
-      dirSchemaCache.put(key, s)
+      fileMemo.put(key, Left(s))
       s
     }
   }
@@ -3647,83 +3637,38 @@ object VersionedTable {
     (if (basePath) r.option("basePath", d) else r).parquet(d)
   }
 
-  /** A zero-row frame with snapshot `version`'s LOGICAL schema — the
-    * schema anchor the DML/maintenance commits and CDF empty returns
-    * need. Built from the memoized schema instead of
-    * `readVersion(…).limit(0)`, which constructs (and re-analyzes) the
-    * whole chain-read + DV-anti-join plan just to throw its rows away —
-    * pure driver latency on EVERY DML commit. */
-  private def emptySnapshot(spark: SparkSession, root: String,
-                            version: Long): DataFrame =
+  /** A zero-row frame with the snapshot's LOGICAL schema — the schema
+    * anchor the DML/maintenance commits and CDF empty returns need,
+    * built from the resolved schema instead of constructing (and
+    * re-analyzing) the whole chain-read plan just to drop its rows. */
+  private def emptySnapshot(spark: SparkSession, snap: Snapshot): DataFrame =
     spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      schemaOf(spark, root, version))
-
-  /** Snapshot `version`'s schema, memoized. Building a relation needs
-    * the schema on EVERY resolution (SQL over a registered gvt view
-    * re-resolves per query), and computing it pays parquet footer
-    * inference over the chain each time; version contents are immutable
-    * so the schema is a per-(root, version) constant. The version dir's
-    * mtime keys the entry so a dropped-and-recreated table at the same
-    * root (tests; CREATE OR REPLACE flows) does not serve a stale
-    * schema (a recreate landing within one mtime tick of the delete is
-    * the residual blind spot — [[invalidateElisionCache]] clears this
-    * cache too for out-of-band surgery). */
-  private[graft] def schemaOf(spark: SparkSession, root: String,
-                              version: Long): org.apache.spark.sql.types.StructType = {
-    val mtime = try fcOf(new HPath(root))
-      .getFileStatus(new HPath(s"$root/v=$version")).getModificationTime
-    catch { case scala.util.control.NonFatal(_) => -1L }
-    val key = (root, version, mtime)
-    schemaCache.get(key).getOrElse {
-      val s = readVersion(spark, root, version).schema
-      schemaCache.put(key, s)
-      s
-    }
-  }
+      snap.schema)
 
   /** Time travel: read any retained snapshot (for an append commit, the
     * union of its `_parent` chain; hive-partitioned chains are read
     * per-dir with basePath so partition columns survive; a chain with
     * deletion-vector commits anti-joins the vectors on parquet row
     * positions). */
-  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame = {
-    checkReadProtocol(root)
-    purgeFloor(root).foreach(fl => if (version < fl)
+  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
+    readSnapshot(spark, snapshot(root, version))
+
+  /** [[readVersion]] of an already-resolved snapshot. */
+  private[graft] def readSnapshot(spark: SparkSession, s: Snapshot): DataFrame = {
+    refuseUnknownReader(s.root, s.readerFeatures)
+    s.purgeFloor.foreach(fl => if (s.version < fl)
       throw new IllegalArgumentException(
-        s"$root: version $version is below the purge floor $fl — VACUUM's " +
-          "file-granular pass reclaimed data files this snapshot may need " +
-          "(the version-drop retention contract); read a version >= the floor"))
-    val dvs = chainDvDirs(root, version)
+        s"${s.root}: version ${s.version} is below the purge floor $fl — " +
+          "VACUUM's file-granular pass reclaimed data files this snapshot " +
+          "may need (the version-drop retention contract); read a " +
+          "version >= the floor"))
     val raw =
-      if (dvs.isEmpty) readDirs(spark, dataDirsOf(root, version))
-      else applyDv(spark, readDirsMetaEliding(spark,
-        dataDirsOf(root, version), fullyMaskedFiles(spark, dvs)), dvs)
+      if (s.dvDirs.isEmpty) readDirs(spark, s.dataDirs, Some(s.flat))
+      else applyDv(spark, readDirsMetaEliding(spark, s), s.dvDirs)
     // column-mapped chain: physical columns surface under the logical
     // names this snapshot's `_colmap` assigns (dropped columns fall out)
-    colmapAt(root, version).map(applyColmap(raw, _)).getOrElse(raw)
-  }
-
-  /** [[readDirs]] with per-leaf `(__gvt_file, __gvt_pos)` provenance
-    * columns — the `_metadata` struct resolves only directly against a
-    * file relation, so it must attach BEFORE any union. */
-  private def readDirsMeta(spark: SparkSession, dirs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    def tag(df: DataFrame) = df.select(col("*"),
-      col("_metadata.file_path").as("__gvt_file"),
-      col("_metadata.row_index").as("__gvt_pos"))
-    if (dirs.size == 1) tag(readDirCached(spark, dirs.head))
-    else if (dirs.forall(d => partColsOf(new HPath(d)).isEmpty)) {
-      // same evolved-chain handling as readDirs (NULL-pad per dir);
-      // same all-flat condition (a mixed chain reads per-dir)
-      val schemas = dirs.map(d => parquetDirSchema(spark, d))
-      if (schemas.forall(_ == schemas.head))
-        tag(spark.read.schema(schemas.head).parquet(dirs: _*))
-      else dirs.map(d => tag(readDirCached(spark, d)))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    }
-    else dirs.map(d => tag(readDirCached(spark, d, basePath = true)))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    s.colmap.map(applyColmap(raw, _)).getOrElse(raw)
   }
 
   /** Drop the rows named by the chain's deletion vectors: one anti-join
@@ -3765,21 +3710,6 @@ object VersionedTable {
   // uncached chain: one deleted-files-sized `_dvc` read plus one footer
   // read per candidate file — the Delta-log metadata class.
 
-  private val footerRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val elisionCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
-
-  /** Test hook: version dirs are immutable in normal operation, so the
-    * memoized elision sets never go stale — a test that edits `_dv*`
-    * sidecars out-of-band must invalidate (the `_protocol` tip-cache
-    * contract, applied here). */
-  def invalidateElisionCache(): Unit = {
-    footerRowsCache.clear(); elisionCache.clear(); purgeFloorCache.clear()
-    schemaCache.clear(); dirSchemaCache.clear(); partColsCache.clear()
-    chainCache.clear(); metaCache.clear(); sideFileCache.clear()
-  }
-
   /** A data-file identity in scheme-free `toUri.getPath` form — the
     * meeting point of `_metadata.file_path` URIs (url-encoded, the
     * `_dv_file`/`_stats.file` form) and driver-side listing paths. */
@@ -3790,24 +3720,14 @@ object VersionedTable {
   private def purgedFile(root: String) = new HPath(root, "_purged")
   private def purgeFloorFile(root: String) = new HPath(root, "_purge_floor")
 
-  private val purgeFloorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
-
   /** The minimum version a read may address after the vacuum's
     * file-granular pass reclaimed data files: versions below it could
-    * silently miss reclaimed files, so [[readVersion]] refuses them
-    * loudly. None until a purge has happened. Memoized per root (the
-    * floor only ever rises, and only via [[vacuum]], which
-    * invalidates). */
-  private[graft] def purgeFloor(root: String): Option[Long] = {
-    val hit = purgeFloorCache.get(root)
-    if (hit != null) return hit
-    val v = readString(purgeFloorFile(root))
+    * silently miss reclaimed files, so [[readSnapshot]] refuses them
+    * loudly. None until a purge has happened. Snapshots carry it (the
+    * floor only rises, and only via [[vacuum]], which invalidates). */
+  private def readPurgeFloor(root: String): Option[Long] =
+    readString(purgeFloorFile(root))
       .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-    if (purgeFloorCache.size > 4096) purgeFloorCache.clear()
-    purgeFloorCache.put(root, v)
-    v
-  }
 
   /** The DV-dead files [[vacuum]]'s file-granular pass physically
     * reclaimed: [[normFileId]] → the masked-row count their vectors
@@ -3858,10 +3778,13 @@ object VersionedTable {
   /** Pooled parquet-footer row counts for `files` (URI-form paths, the
     * `_dv_file` / `_metadata.file_path` shape). Missing/unreadable
     * files are absent from the result — callers decide the semantics.
-    * Successful reads memoize in [[footerRowsCache]]. */
+    * Successful reads memoize in the file memo. */
   private def footerRowsOf(files: Seq[String]): Map[String, Long] = {
     if (files.isEmpty) return Map.empty
-    val (hits, misses) = files.distinct.partition(footerRowsCache.containsKey)
+    val known = files.distinct.map(f =>
+      f -> fileMemo.get((f, footerKey)).collect { case Right(n) => n })
+    val hits = known.collect { case (f, Some(n)) => f -> n }
+    val misses = known.collect { case (f, None) => f }
     val fresh: Map[String, Long] =
       if (misses.isEmpty) Map.empty
       else {
@@ -3883,35 +3806,28 @@ object VersionedTable {
                 }
             })
           }.flatMap { case (f, fut) =>
-            fut.get().map { n => footerRowsCache.put(f, n); (f, n) }
+            fut.get().map { n => fileMemo.put((f, footerKey), Right(n)); (f, n) }
           }.toMap
         } finally pool.shutdown()
       }
-    hits.map(f => f -> (footerRowsCache.get(f): Long)).toMap ++ fresh
+    hits.toMap ++ fresh
   }
 
-  /** Files of the chain whose every row the chain's deletion vectors
-    * mask, as [[normFileId]] strings — excluded from scans by every
-    * version reader. */
-  private[graft] def fullyMaskedFiles(spark: SparkSession,
-                                      dvDirs: Seq[String]): Set[String] = {
+  /** Files of the snapshot's chain whose every row the chain's deletion
+    * vectors mask, as [[normFileId]] strings — [[Snapshot.elided]]. */
+  private def fullyMaskedFiles(snap: Snapshot): Set[String] = {
+    val dvDirs = snap.dvDirs
     if (dvDirs.isEmpty) return Set.empty
-    val key = dvDirs.sorted.mkString("\n")
-    val hit = elisionCache.get(key)
-    if (hit != null) return hit
-    // `_dvc` is a text meta FILE next to each `_dv` dir — resolves read
-    // it driver-side, no Spark job. Lines carrying the commit-recorded
-    // TOTAL resolve with zero footer IO; two-field legacy lines fall
-    // back to one pooled footer probe per file.
+    // each DV commit's `_dvc` text rides its snapshot. Lines carrying
+    // the commit-recorded TOTAL resolve with zero footer IO; two-field
+    // legacy lines fall back to one pooled footer probe per file.
     val counts = scala.collection.mutable.Map.empty[String, Long]
     val totals = scala.collection.mutable.Map.empty[String, Long]
-    dvDirs.foreach { d =>
-      readSideFile(new HPath(d.stripSuffix("_dv") + "_dvc")).foreach {
-        _.linesIterator.filter(_.nonEmpty).foreach { line =>
-          parseDvcLine(line).foreach { case (f, n, t) =>
-            counts(f) = counts.getOrElse(f, 0L) + n
-            t.foreach(totals(f) = _)
-          }
+    snap.dvCounts.foreach {
+      _.linesIterator.filter(_.nonEmpty).foreach { line =>
+        parseDvcLine(line).foreach { case (f, n, t) =>
+          counts(f) = counts.getOrElse(f, 0L) + n
+          t.foreach(totals(f) = _)
         }
       }
     }
@@ -3948,25 +3864,19 @@ object VersionedTable {
             normFileId(f)
         }.toSet
       }
-    if (elisionCache.size > 4096) elisionCache.clear()
-    if (footerRowsCache.size > 65536) footerRowsCache.clear()
-    elisionCache.put(key, out)
     out
   }
 
-  /** [[readDirsMeta]] minus the fully-masked files: per-dir listings
+  /** The snapshot's dirs with [[withRowIds]], minus the fully-masked
+    * files ([[Snapshot.elided]]): per-dir listings
     * filtered against `elided`, read as explicit file groups (hive
     * layouts keep their partition columns under each dir's own
     * basePath). A zero-row full-schema anchor keeps the union's shape
     * complete even when the elided files were the sole carriers of an
     * evolved column — planning-only cost, no data read. */
-  private def readDirsMetaEliding(spark: SparkSession, dirs: Seq[String],
-                                  elided: Set[String]): DataFrame = {
-    if (elided.isEmpty) return readDirsMeta(spark, dirs)
-    import org.apache.spark.sql.functions.col
-    def tag(df: DataFrame) = df.select(col("*"),
-      col("_metadata.file_path").as("__gvt_file"),
-      col("_metadata.row_index").as("__gvt_pos"))
+  private def readDirsMetaEliding(spark: SparkSession, snap: Snapshot): DataFrame = {
+    val (dirs, elided) = (snap.dataDirs, snap.elided)
+    if (elided.isEmpty) return readDirs(spark, dirs, Some(snap.flat), withRowIds)
     val keep = dirs.flatMap(d =>
       listDataFiles(d).filterNot(f => elided(normFileId(f))))
     // the anchor skips dirs the vacuum's file-granular pass EMPTIED —
@@ -3975,9 +3885,9 @@ object VersionedTable {
     val anchorDirs = dirs.filter(d => listDataFiles(d).nonEmpty)
     require(anchorDirs.nonEmpty,
       s"chain has no readable data file left (every member emptied?): $dirs")
-    val anchor = readDirsMeta(spark, anchorDirs).limit(0)
+    val anchor = readDirs(spark, anchorDirs, Some(snap.flat), withRowIds).limit(0)
     if (keep.isEmpty) anchor
-    else readFileGroups(spark, keep, dirsLayout(dirs).nonEmpty, tag)
+    else readFileGroups(spark, keep, snap.dirLayout.nonEmpty, withRowIds)
       .foldLeft(anchor)(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -4001,10 +3911,10 @@ object VersionedTable {
                         locateJoins: Seq[LocateSemiJoin] = Seq.empty,
                         scalarJoins: Seq[LocateScalarJoin] = Seq.empty): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
+    val snap = liveSnapshot(root)
+    val v = snap.version
     // locate scan zone-map-pruned by the predicate's implied bounds
-    val live = prunedVersionRead(spark, root, v,
+    val live = prunedVersionRead(spark, snap,
       predicateRanges(predicate), keepMeta = true,
       strRanges = predicateStrRanges(predicate))
     val cdf = cdfEnabled(root)
@@ -4020,7 +3930,7 @@ object VersionedTable {
         else Map("_cdf" -> hit.drop(
             "__gvt_file" +: "__gvt_pos" +: scalarJoinCols(scalarJoins): _*)
           .withColumn("_change_type", lit("delete")))
-      write(emptySnapshot(spark, root, v), root,
+      write(emptySnapshot(spark, snap), root,
         metaFiles = Map("_dv_parent" -> v.toString),
         subdirWrites = Map("_dv" -> dv) ++ cdfRows,
         baseVersion = Some(v), operation = "DELETE_DV")
@@ -4238,14 +4148,14 @@ object VersionedTable {
     // logical schema is what the restore resurrects); physical names the
     // current tip used beyond the target are retired so no future add
     // can collide with still-on-disk storage
-    val cur = latestVersion(root).flatMap(v => colmapAt(root, v))
-    val tgt = colmapAt(root, version)
+    val target = snapshot(root, version)
+    val cur = latestSnapshot(root).flatMap(_.colmap)
+    val tgt = target.colmap
     val meta: Map[String, String] =
       if (cur.isEmpty && tgt.isEmpty) Map.empty
       else {
         val t = tgt.getOrElse(Colmap(
-          readVersion(spark, root, version).columns.toSeq.map(c => (c, c)),
-          Set.empty))
+          target.schema.fieldNames.toSeq.map(c => (c, c)), Set.empty))
         val curPhys = cur.map(c => c.active.map(_._2).toSet ++ c.retired)
           .getOrElse(Set.empty)
         Map("_colmap" -> serializeColmap(Colmap(t.active,
@@ -4255,8 +4165,8 @@ object VersionedTable {
     // a full-snapshot re-commit must carry the resurrected snapshot's
     // hive layout — written flat it would silently strip partition
     // pruning from the whole table from this version on
-    write(readVersion(spark, root, version), root, allowEvolution = true,
-      partitionBy = layoutOf(root, version),
+    write(readSnapshot(spark, target), root, allowEvolution = true,
+      partitionBy = target.layout,
       metaFiles = meta, operation = s"RESTORE(v=$version)",
       assignIdentity = false)
   }
@@ -4286,8 +4196,8 @@ object VersionedTable {
     * source table's watermarks are not this table's state. The write()
     * path re-stamps `_commit_ts`/`_operation`/`_prev` AFTER metaFiles,
     * so carried copies of those can never shadow the new commit's own. */
-  private def carriedMetaOfChain(root: String, v: Long): Map[String, String] =
-    dataDirsOf(root, v).filter(_.startsWith(s"$root/"))
+  private def carriedMetaOfChain(snap: Snapshot): Map[String, String] =
+    snap.dataDirs.filter(_.startsWith(s"${snap.root}/"))
       .foldLeft(Map.empty[String, String]) { (m, d) =>
         m ++ carriedMetaOfDir(new HPath(d))
       }
@@ -4311,11 +4221,11 @@ object VersionedTable {
   def compactChain(spark: SparkSession, root: String,
                    targetFileBytes: Long = 128L * 1024 * 1024,
                    statsCols: Seq[String] = Seq.empty): Long = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    require(chainDvDirs(root, v).isEmpty,
+    val snap = liveSnapshot(root)
+    val v = snap.version
+    require(snap.dvDirs.isEmpty,
       s"$root: chain carries deletion vectors — use compact() to materialize them")
-    val dirs = dataDirsOf(root, v)
+    val dirs = snap.dataDirs
     require(dirs.forall(_.startsWith(s"$root/")),
       s"$root: chain crosses a shallow clone — use compact() (full rewrite) " +
         "to materialize the clone before chain folding")
@@ -4323,13 +4233,9 @@ object VersionedTable {
     val baseDir = dirs.head
     val baseV = baseDir.substring(baseDir.lastIndexOf("v=") + 2).toLong
     val batchDirs = dirs.tail
-    val fc = fcOf(new HPath(root))
-    def sizeOf(p: HPath): Long = fc.util.listStatus(p).map { st =>
-      if (st.isDirectory) sizeOf(st.getPath) else st.getLen
-    }.sum
-    val bytes = batchDirs.map(d => sizeOf(new HPath(d))).sum
+    val bytes = batchDirs.map(treeBytes).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val parts = layoutOf(root, v)
+    val parts = snap.layout
     // re-stat the folded batch if every folded dir was statted
     val stats =
       if (statsCols.nonEmpty) statsCols
@@ -4350,7 +4256,7 @@ object VersionedTable {
     // view, and re-running logical-name gates would mis-resolve
     write(readDirs(spark, batchDirs).coalesce(nFiles), root,
       partitionBy = parts, statsCols = stats,
-      metaFiles = carriedMetaOfChain(root, v) + ("_parent" -> baseV.toString),
+      metaFiles = carriedMetaOfChain(snap) + ("_parent" -> baseV.toString),
       baseVersion = Some(v), operation = "COMPACT_CHAIN",
       physicalInput = true)
   }
@@ -4383,35 +4289,40 @@ object VersionedTable {
   def compact(spark: SparkSession, root: String,
               targetFileBytes: Long = 128L * 1024 * 1024,
               zorderBy: Seq[String] = Seq.empty): Long = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    val dir = new HPath(s"$root/v=$v")
-    val fc = fcOf(dir)
+    val snap = liveSnapshot(root)
+    val v = snap.version
     // carry the CHAIN's meta files (e.g. the applied-batch watermark of
     // an additive streaming writer — possibly committed in an earlier
     // batch dir than the tip) into the compacted version — compaction
     // must not erase transactional metadata, or a post-compaction
     // checkpoint replay would re-apply a batch
     // (chain links must NOT carry: the compacted snapshot is FULL)
-    val carriedMeta = carriedMetaOfChain(root, v)
-    def sizeOf(p: HPath): Long = fc.util.listStatus(p).map { st =>
-      if (st.isDirectory) sizeOf(st.getPath) else st.getLen
-    }.sum
+    val carriedMeta = carriedMetaOfChain(snap)
     // probe the CHAIN BASE: an append tip always follows the base's
     // partition layout, and the compacted full snapshot must keep it
-    val parts = layoutOf(root, v)
+    val parts = snap.layout
     // size the rewrite over the LOGICAL snapshot: an append chain's rows
     // live across every chain directory, not just the tip
-    val totalBytes = dataDirsOf(root, v).map(d => sizeOf(new HPath(d))).sum
+    val totalBytes = snap.dataDirs.map(treeBytes).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val snap = readVersion(spark, root, v)
-    val (rewritten, op) = clusteredRewrite(snap, parts, zorderBy, nFiles, "COMPACT")
+    val (rewritten, op) =
+      clusteredRewrite(readSnapshot(spark, snap), parts, zorderBy, nFiles, "COMPACT")
     // conditional on the snapshot being compacted: a merge that lands
     // mid-compaction must win over the rewrite, not be clobbered by it
     write(rewritten, root, partitionBy = parts,
       statsCols = if (zorderBy.nonEmpty) zorderBy else Seq.empty,
       metaFiles = carriedMeta, baseVersion = Some(v), operation = op,
       assignIdentity = false)
+  }
+
+  /** Bytes of every file under `dir` (sidecars included) — sizes a
+    * rewrite's file count. */
+  private def treeBytes(dir: String): Long = {
+    val fc = fcOf(new HPath(dir))
+    def walk(p: HPath): Long = fc.util.listStatus(p).map { st =>
+      if (st.isDirectory) walk(st.getPath) else st.getLen
+    }.sum
+    walk(new HPath(dir))
   }
 
   /** The compaction rewrite of `snap`: plain `coalesce` bin-pack, or a
@@ -4506,9 +4417,9 @@ object VersionedTable {
                    zorderBy: Seq[String] = Seq.empty,
                    minFileBytes: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions.{col, lit, when}
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    val parts = layoutOf(root, v)
+    val snap = liveSnapshot(root)
+    val v = snap.version
+    val parts = snap.layout
     require(parts.nonEmpty,
       s"OPTIMIZE … WHERE: table at $root is not hive-partitioned — the " +
         "partition directory is the unit of a scoped rewrite (use plain " +
@@ -4523,9 +4434,9 @@ object VersionedTable {
     // driver work that sizes the rewrite and detects the no-op, with
     // the same null semantics as the scan (hive default partition →
     // NULL → predicate never true)
-    val live0 = prunedVersionRead(spark, root, v, Seq.empty, keepMeta = true)
+    val live0 = prunedVersionRead(spark, snap, Seq.empty, keepMeta = true)
     val types = parts.map(p => p -> live0.schema(p).dataType).toMap
-    val specs = showPartitions(root)
+    val specs = showPartitions(snap)
     if (specs.isEmpty) return v
     import scala.jdk.CollectionConverters._
     // each `k=v` segment maps to its column BY KEY NAME (never by
@@ -4562,29 +4473,16 @@ object VersionedTable {
     // Z-ordered scoped rewrites keep full-scope semantics (clustering
     // must cover every row, Delta's ZORDER contract).
     minFileBytes.filter(_ => zorderBy.isEmpty).foreach { minB =>
-      val dvDirs = chainDvDirs(root, v)
-      val elided = fullyMaskedFiles(spark, dvDirs)
-      val cands = dataDirsOf(root, v).filterNot(isSchemaOnlySlice)
+      val cands = snap.dataBearingDirs
         .flatMap(d => matchedSpecs.map(s => s"$d/$s"))
         .flatMap(listDataFilesWithSize)
         .filter(_._2 < minB)
-        .filterNot { case (f, _) => elided(normFileId(f)) }
+        .filterNot { case (f, _) => snap.elided(normFileId(f)) }
       if (cands.size < 2) return v
-      def tagM(df: DataFrame) = df.select(col("*"),
-        col("_metadata.file_path").as("__gvt_file"),
-        col("_metadata.row_index").as("__gvt_pos"))
-      val tagged = readFileGroups(spark, cands.map(_._1), partitioned = true,
-        tagM).reduce(_.unionByName(_, allowMissingColumns = true))
-      val masked = if (dvDirs.isEmpty) tagged
-        else applyDv(spark, tagged, dvDirs, keepMeta = true)
-      val logical = colmapAt(root, v)
-        .map(applyColmap(masked, _, keepMeta = true)).getOrElse(masked)
-      val anchored = logical.unionByName(
-        emptySnapshot(spark, root, v), allowMissingColumns = true)
       val n = math.max(1,
         math.ceil(cands.map(_._2).sum.toDouble / targetFileBytes).toInt)
-      val hitS = anchored
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hitS = readLiveFiles(spark, snap, cands.map(_._1),
+        partitioned = true)
       try {
         val dv = hitS.select(col("__gvt_file").as("_dv_file"),
           col("__gvt_pos").as("_dv_pos"))
@@ -4599,19 +4497,9 @@ object VersionedTable {
     }
     // size the bin-pack from the matching directories' bytes — listing
     // only, no data read
-    def sizeOf(p: HPath): Long = {
-      val fc = fcOf(p)
-      if (!fc.util.exists(p)) 0L
-      else fc.util.listStatus(p).map { st =>
-        if (st.isDirectory) sizeOf(st.getPath)
-        else if (st.getPath.getName.startsWith("_") ||
-          st.getPath.getName.startsWith(".")) 0L
-        else st.getLen
-      }.sum
-    }
-    val totalBytes = dataDirsOf(root, v).filterNot(isSchemaOnlySlice)
-      .flatMap(d => matchedSpecs.map(s => new HPath(s"$d/$s")))
-      .map(sizeOf).sum
+    val totalBytes = snap.dataBearingDirs
+      .flatMap(d => matchedSpecs.map(s => s"$d/$s"))
+      .flatMap(listDataFilesWithSize).map(_._2).sum
     val nFiles = math.max(1,
       math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     // partition pruning does the selection: `predicate` references only
@@ -4633,8 +4521,25 @@ object VersionedTable {
     } finally { hit.unpersist(); () }
   }
 
-  /** Non-hidden files under `dir` with their byte sizes — the
-    * [[listDataFiles]] walk, kept in one listing pass. */
+  /** The LIVE rows of `files` (members of `snap`'s chain), in logical
+    * column space with `(__gvt_file, __gvt_pos)` provenance, persisted
+    * for the caller's DV commit: vectors anti-joined, the mapping
+    * applied (write() re-maps), and a zero-row full-schema anchor
+    * unioned in — selected files may predate an evolved column, and the
+    * rewrite must still carry it (NULLs). */
+  private def readLiveFiles(spark: SparkSession, snap: Snapshot,
+                            files: Seq[String], partitioned: Boolean): DataFrame = {
+    val tagged = readFileGroups(spark, files, partitioned, withRowIds)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val masked =
+      if (snap.dvDirs.isEmpty) tagged
+      else applyDv(spark, tagged, snap.dvDirs, keepMeta = true)
+    snap.colmap.map(applyColmap(masked, _, keepMeta = true)).getOrElse(masked)
+      .unionByName(emptySnapshot(spark, snap), allowMissingColumns = true)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Non-hidden files under `dir` with their byte sizes ([[listDataFiles]]). */
   private def listDataFilesWithSize(dir: String): Seq[(String, Long)] = {
     val p = new HPath(dir)
     val fc = fcOf(p)
@@ -4666,37 +4571,17 @@ object VersionedTable {
                    smallFileBytes: Long = 32L * 1024 * 1024,
                    targetFileBytes: Long = 128L * 1024 * 1024): Long = {
     import org.apache.spark.sql.functions.col
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    val parts = layoutOf(root, v)
-    val dvDirs = chainDvDirs(root, v)
-    val elided = fullyMaskedFiles(spark, dvDirs)
-    val cands = dataDirsOf(root, v).filterNot(isSchemaOnlySlice)
+    val snap = liveSnapshot(root)
+    val v = snap.version
+    val parts = snap.layout
+    val cands = snap.dataBearingDirs
       .flatMap(listDataFilesWithSize)
       .filter(_._2 < smallFileBytes)
-      .filterNot { case (f, _) => elided(normFileId(f)) }
+      .filterNot { case (f, _) => snap.elided(normFileId(f)) }
     if (cands.size < 2) return v
     val nFiles = math.max(1,
       math.ceil(cands.map(_._2).sum.toDouble / targetFileBytes).toInt)
-    def tag(df: DataFrame) = df.select(col("*"),
-      col("_metadata.file_path").as("__gvt_file"),
-      col("_metadata.row_index").as("__gvt_pos"))
-    val tagged = readFileGroups(spark, cands.map(_._1), parts.nonEmpty, tag)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val masked =
-      if (dvDirs.isEmpty) tagged
-      else applyDv(spark, tagged, dvDirs, keepMeta = true)
-    // column-mapped chains: files carry physical names; rewrite flows
-    // logical (write() re-maps), provenance riding alongside
-    val logical = colmapAt(root, v)
-      .map(applyColmap(masked, _, keepMeta = true)).getOrElse(masked)
-    // zero-row full-schema anchor: selected files may predate an
-    // evolved column — the packed rewrite must still carry it (NULLs),
-    // not silently narrow the schema for its rows
-    val anchored = logical.unionByName(
-      emptySnapshot(spark, root, v), allowMissingColumns = true)
-    val hit = anchored
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hit = readLiveFiles(spark, snap, cands.map(_._1), parts.nonEmpty)
     try {
       val dv = hit
         .select(col("__gvt_file").as("_dv_file"), col("__gvt_pos").as("_dv_pos"))
@@ -4737,20 +4622,18 @@ object VersionedTable {
                          targetFileBytes: Long = 128L * 1024 * 1024,
                          force: Boolean = false): Long = {
     import org.apache.spark.sql.functions.col
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
+    val snap = liveSnapshot(root)
+    val v = snap.version
     val keys = clusterByOf(root)
     require(keys.nonEmpty && keys.size <= 4,
       s"incremental clustering: gvt.clusterBy must name 1-4 columns at $root")
-    val parts = layoutOf(root, v)
+    val parts = snap.layout
     require(!keys.exists(parts.contains),
       s"clusterBy columns must not be partition keys ($parts)")
-    val dvDirs = chainDvDirs(root, v)
-    val elided = fullyMaskedFiles(spark, dvDirs)
     val vdirRe = "^(.*)/v=(\\d+)$".r
     // `force` (OPTIMIZE … FULL): ignore the stamps, re-cluster every
     // live file on the current keys — one global layout
-    val cands = dataDirsOf(root, v).filterNot(isSchemaOnlySlice)
+    val cands = snap.dataBearingDirs
       .filterNot {
         case _ if force => false
         case vdirRe(r, vv) => readMeta(r, vv.toLong, "_clustered")
@@ -4758,24 +4641,11 @@ object VersionedTable {
         case _ => false
       }
       .flatMap(listDataFilesWithSize)
-      .filterNot { case (f, _) => elided(normFileId(f)) }
+      .filterNot { case (f, _) => snap.elided(normFileId(f)) }
     if (cands.isEmpty) return v
     val nFiles = math.max(1,
       math.ceil(cands.map(_._2).sum.toDouble / targetFileBytes).toInt)
-    def tag(df: DataFrame) = df.select(col("*"),
-      col("_metadata.file_path").as("__gvt_file"),
-      col("_metadata.row_index").as("__gvt_pos"))
-    val tagged = readFileGroups(spark, cands.map(_._1), parts.nonEmpty, tag)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val masked =
-      if (dvDirs.isEmpty) tagged
-      else applyDv(spark, tagged, dvDirs, keepMeta = true)
-    val logical = colmapAt(root, v)
-      .map(applyColmap(masked, _, keepMeta = true)).getOrElse(masked)
-    val anchored = logical.unionByName(
-      emptySnapshot(spark, root, v), allowMissingColumns = true)
-    val hit = anchored
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hit = readLiveFiles(spark, snap, cands.map(_._1), parts.nonEmpty)
     try {
       val dv = hit
         .select(col("__gvt_file").as("_dv_file"), col("__gvt_pos").as("_dv_pos"))
@@ -4814,13 +4684,13 @@ object VersionedTable {
     * a partition whose every row a deletion vector removed still lists
     * until compaction materializes the delete). Sorted `p=v[/q=w…]`
     * strings, duplicates across chain members collapsed. */
-  def showPartitions(root: String): Seq[String] = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    val dirs = dataDirsOf(root, v).filterNot(isSchemaOnlySlice)
-    val parts = layoutOf(root, v)
+  def showPartitions(root: String): Seq[String] = showPartitions(liveSnapshot(root))
+
+  private def showPartitions(snap: Snapshot): Seq[String] = {
+    val dirs = snap.dataBearingDirs
+    val parts = snap.layout
     require(parts.nonEmpty,
-      s"SHOW PARTITIONS: table at $root is not partitioned")
+      s"SHOW PARTITIONS: table at ${snap.root} is not partitioned")
     if (dirs.isEmpty) return Seq.empty // created empty: no partitions yet
     def walk(d: HPath, depth: Int, prefix: List[String]): Seq[List[String]] = {
       if (depth == 0) return Seq(prefix)
@@ -4880,7 +4750,8 @@ object VersionedTable {
       }
       // schema sanity: the moved files must read as one parquet relation
       // (hive layout included) — fails the convert BEFORE it publishes
-      readVersion(spark, root, next).schema
+      // (a plain dir read: no snapshot of the uncommitted version)
+      readDirs(spark, Seq(vDir.toString)).schema
       writeString(new HPath(vDir, "_commit_ts"),
         System.currentTimeMillis.toString, overwrite = true)
       writeString(new HPath(vDir, "_operation"), "CONVERT", overwrite = true)
@@ -4916,21 +4787,17 @@ object VersionedTable {
     * mapping debt must ALSO leave the storage. */
   def purge(spark: SparkSession, root: String,
             targetFileBytes: Long = 128L * 1024 * 1024): Long = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"no versions at $root"))
-    val dirs = dataDirsOf(root, v)
+    val snap = liveSnapshot(root)
+    val v = snap.version
+    val dirs = snap.dataDirs
     // partition layout: drop/rename of partition columns is refused, so
     // the physical dir layout's names ARE the logical ones
-    val parts = layoutOf(root, v)
-    val fc = fcOf(new HPath(dirs.head))
-    def sizeOf(p: HPath): Long = fc.util.listStatus(p).map { st =>
-      if (st.isDirectory) sizeOf(st.getPath) else st.getLen
-    }.sum
-    val totalBytes = dirs.map(d => sizeOf(new HPath(d))).sum
+    val parts = snap.layout
+    val totalBytes = dirs.map(treeBytes).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val snap = readVersion(spark, root, v) // logical space, DVs applied
-    write(snap.coalesce(nFiles), root, partitionBy = parts,
-      metaFiles = carriedMetaOfChain(root, v) + ("_colmap" -> ""),
+    // logical space, DVs applied
+    write(readSnapshot(spark, snap).coalesce(nFiles), root, partitionBy = parts,
+      metaFiles = carriedMetaOfChain(snap) + ("_colmap" -> ""),
       baseVersion = Some(v), operation = "REORG(PURGE)",
       assignIdentity = false)
   }
@@ -4979,11 +4846,13 @@ object VersionedTable {
     val keepBase = committed.takeRight(keep).toSet ++ latestVersion(root) ++ young
     // walk BOTH link kinds: a kept deletion-vector commit's rows live
     // entirely in its _dv_parent chain
+    val links = scala.collection.mutable.Map.empty[Long, Option[Long]]
+    def link(v: Long) = links.getOrElseUpdate(v, chainLink(root, v))
     val keepSet = keepBase.flatMap { v =>
       var chain = List(v)
-      var parent = chainLink(root, v)
+      var parent = link(v)
       while (parent.isDefined) { chain = parent.get :: chain
-        parent = chainLink(root, parent.get) }
+        parent = link(parent.get) }
       chain
     }
     val dropCommitted = committed.filterNot(keepSet)
@@ -5002,7 +4871,7 @@ object VersionedTable {
     drop.foreach(v => delete(new HPath(s"$root/v=$v"), recursive = true))
     // vacuum edits history under an UNCHANGED tip — cached chains (and
     // anything keyed on dropped version dirs) must not outlive it
-    if (drop.nonEmpty) invalidateElisionCache()
+    if (drop.nonEmpty) invalidate(Some(root))
     // GC commit markers that reference a dropped version on either side,
     // plus empty "husk" markers (a writer that crashed between the
     // marker create and its content write) past the grace period — they
@@ -5040,7 +4909,7 @@ object VersionedTable {
     // files' footers. Pure metadata: `_dvc` text reads + one footer
     // read per candidate.
     latestVersion(root).foreach { live =>
-      val dvDirs = chainDvDirs(root, live)
+      val dvDirs = snapshot(root, live).dvDirs
       if (dvDirs.nonEmpty && dvDirs.forall(_.startsWith(s"$root/"))) {
         val minRead = keepBase.min
         val already = purgedEntries(root)
@@ -5080,9 +4949,9 @@ object VersionedTable {
             recursive = false); () }
           catch { case scala.util.control.NonFatal(_) => () }
         }
-        if (already.nonEmpty && purgeFloor(root).isEmpty) {
+        if (already.nonEmpty && readPurgeFloor(root).isEmpty) {
           writeString(purgeFloorFile(root), minRead.toString, overwrite = true)
-          purgeFloorCache.clear()
+          invalidate(Some(root))
         }
         // probe only files this pass could actually reclaim: unrecorded,
         // total-less, AND mask-complete at-or-below every retained read
@@ -5111,7 +4980,7 @@ object VersionedTable {
           // delete-then-record order left a missing-but-unrecorded file
           // whose footer probe failed every subsequent read.
           val floor = math.max(minRead,
-            purgeFloor(root).getOrElse(Long.MinValue))
+            readPurgeFloor(root).getOrElse(Long.MinValue))
           writeString(purgeFloorFile(root), floor.toString, overwrite = true)
           val vdir = "^(.*/v=\\d+)/".r
           // GC: entries whose version dir is gone (version-drop vacuum
@@ -5131,7 +5000,7 @@ object VersionedTable {
           reclaimed.foreach { case (f, _) =>
             delete(new HPath(new java.net.URI(raw(f))), recursive = false)
           }
-          invalidateElisionCache()
+          invalidate(Some(root))
         }
       }
     }

@@ -130,8 +130,7 @@ private[gvt] class GvtCdfSource(sqlContext: SQLContext,
   // the column mapping the stream's FIXED schema was derived under —
   // hop frames align to it (logical names drift along a mapped chain)
   private val anchorCm =
-    VersionedTable.latestVersion(root)
-      .flatMap(v => VersionedTable.colmapAt(root, v))
+    VersionedTable.latestSnapshot(root).flatMap(_.colmap)
 
   /** A hop's frame arrives under the HOP's logical column names; on a
     * column-mapped chain those drift (rename/drop) while the stream's
@@ -144,7 +143,7 @@ private[gvt] class GvtCdfSource(sqlContext: SQLContext,
     * its history (previously: UNRESOLVED_COLUMN on the first pre-rename
     * hop). */
   private def alignToAnchor(f: DataFrame, hopV: Long): DataFrame = {
-    val hopCm = VersionedTable.colmapAt(root, hopV)
+    val hopCm = VersionedTable.snapshot(root, hopV).colmap
     if (hopCm == anchorCm) return f // same mapping (incl. both unmapped)
     val ancL2P = anchorCm.map(_.active.toMap).getOrElse(Map.empty[String, String])
     val hopP2L = hopCm.map(_.active.map(_.swap).toMap).getOrElse(Map.empty[String, String])

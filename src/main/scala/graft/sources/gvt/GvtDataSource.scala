@@ -11,7 +11,7 @@ import org.apache.spark.sql.graft.StreamingBridge
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, StreamSinkProvider, StreamSourceProvider, TableScan}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{Decimal, StructType}
-import graft.sources.VersionedTable
+import graft.sources.{Snapshot, VersionedTable}
 
 /** `spark.read.format("gvt")` — the DataSource surface of
   * [[graft.sources.VersionedTable]], mirroring how the reference
@@ -126,23 +126,20 @@ class DefaultSource extends RelationProvider
         VersionedTable.versionAsOf(root, parseTs(ts))))
       .getOrElse(VersionedTable.latestVersion(root).getOrElse(
         throw new IllegalArgumentException(s"gvt: no versions at $root")))
-    if (VersionedTable.chainDvDirs(root, version).nonEmpty ||
-        VersionedTable.hasColmap(root, version))
+    val snap = VersionedTable.snapshot(root, version)
+    if (snap.dvDirs.nonEmpty || snap.colmap.isDefined)
       // a snapshot carrying un-materialized deletion vectors (the
       // vectors must anti-join out) or a column mapping (physical
       // footer names must surface under their logical labels) cannot be
       // served as a plain file relation; it plans through the
       // resolving relation instead — zone-map pruning and
       // filter/column pushdown preserved inside
-      return new GvtDvRelation(spark, sqlContext, root, version, pinned)
-    val dirs = VersionedTable.dataDirsOf(root, version)
-    val fullSchema = VersionedTable.schemaOf(spark, root, version)
-    val index = new GvtFileIndex(spark, dirs.map(new Path(_)),
-      VersionedTable.fileStats(spark, root, version), root, pinned,
-      fullSchema)
+      return new GvtDvRelation(spark, sqlContext, snap, pinned)
+    val index = new GvtFileIndex(spark, snap,
+      VersionedTable.fileStats(spark, snap), pinned)
     val partitionSchema = index.partitionSchema
     val dataSchema = StructType(
-      fullSchema.filterNot(f => partitionSchema.fieldNames.contains(f.name)))
+      snap.schema.filterNot(f => partitionSchema.fieldNames.contains(f.name)))
     HadoopFsRelation(index, partitionSchema, dataSchema, None,
       new ParquetFileFormat, Map.empty)(spark)
   }
@@ -191,8 +188,8 @@ class DefaultSource extends RelationProvider
           .equalsIgnoreCase("dynamic")
         val layout =
           if (!exists) Seq.empty
-          else VersionedTable.layoutOf(root,
-            VersionedTable.latestVersion(root).get)
+          else VersionedTable.latestSnapshot(root).map(_.layout)
+            .getOrElse(Seq.empty)
         if (dynMode && layout.nonEmpty)
           Some(VersionedTable.dynamicOverwrite(sqlContext.sparkSession,
             root, data, layout))
@@ -273,8 +270,7 @@ class DefaultSource extends RelationProvider
             VersionedTable.append(batch, root, metaFiles = meta,
               statsCols = statsCols)
             for (n <- autoCompactEvery) {
-              val tip = VersionedTable.latestVersion(root).get
-              if (VersionedTable.dataDirsOf(root, tip).size >= n)
+              if (VersionedTable.latestSnapshot(root).exists(_.dataDirs.size >= n))
                 VersionedTable.compactChain(batch.sparkSession, root,
                   statsCols = statsCols)
             }
@@ -317,11 +313,13 @@ class DefaultSource extends RelationProvider
   * only while vectors are pending materialization. */
 class GvtDvRelation(
     spark: SparkSession, override val sqlContext: SQLContext,
-    val root: String, val version: Long, val pinned: Boolean = false)
+    snap: Snapshot, val pinned: Boolean = false)
   extends BaseRelation with PrunedFilteredScan {
 
-  override val schema: StructType =
-    VersionedTable.schemaOf(spark, root, version)
+  val root: String = snap.root
+  val version: Long = snap.version
+
+  override val schema: StructType = snap.schema
 
   /** Real size, not the never-broadcast default: without this a 10 MB
     * dimension table with ONE pending deletion vector (or a column
@@ -340,9 +338,7 @@ class GvtDvRelation(
       // masked files carry no servable row, so their bytes don't count
       // against the broadcast threshold — a partition-wise-deleted
       // dimension broadcasts again BEFORE compaction or ANALYZE
-      VersionedTable.chainDataBytes(root, version,
-        excluding = VersionedTable.fullyMaskedFiles(spark,
-          VersionedTable.chainDvDirs(root, version)))
+      VersionedTable.chainDataBytes(snap, excluding = snap.elided)
     }
 
   override def needConversion: Boolean = false
@@ -351,7 +347,7 @@ class GvtDvRelation(
                          filters: Array[Filter]): RDD[Row] = {
     import org.apache.spark.sql.functions.col
     val ranges = GvtV1Filters.ranges(filters)
-    val base = VersionedTable.prunedVersionRead(spark, root, version, ranges,
+    val base = VersionedTable.prunedVersionRead(spark, snap, ranges,
       strRanges = GvtV1Filters.strRanges(filters))
     val filtered = filters.flatMap(GvtV1Filters.toColumn)
       .foldLeft(base)(_ filter _)
@@ -538,29 +534,31 @@ private[gvt] object GvtV1Filters {
   * predicates. Pruning is result-invisible: the scan still evaluates
   * the full residual filter on surviving files. */
 class GvtFileIndex(
-    spark: SparkSession, roots: Seq[Path],
+    spark: SparkSession, snap: Snapshot,
     private[graft] val stats: Option[VersionedTable.FileZoneMaps],
-    val tableRoot: String = "", val pinned: Boolean = false,
-    fullSchema: StructType = new StructType())
+    val pinned: Boolean = false)
   extends FileIndex {
+
+  val tableRoot: String = snap.root
+  private val roots: Seq[Path] = snap.dataDirs.map(new Path(_))
+  private val fullSchema: StructType = snap.schema
 
   // ADD COLUMNS' footer-only slices hold zero rows and (on partitioned
   // tables) no partition layout — drop them before building children,
   // or per-dir partition discovery infers an empty partition schema for
   // the slice and the layout-consistency require below fails. The
   // slice's schema contribution is irrelevant here: the relation's
-  // schema comes from VersionedTable.readVersion, not the index.
-  private val dataRoots: Seq[Path] = {
-    val kept = roots.filterNot(r => VersionedTable.isSchemaOnlySlice(r.toString))
-    if (kept.nonEmpty) kept else roots
-  }
+  // schema is the snapshot's, not the index's.
+  private val dataRoots: Seq[Path] =
+    if (snap.dataBearingDirs.nonEmpty) snap.dataBearingDirs.map(new Path(_))
+    else roots
 
   // a partitioned multi-dir chain needs ONE index per version dir (each
   // dir is its own partition-discovery base — a single index over all
   // roots raises CONFLICTING_DIRECTORY_STRUCTURES); everything else is
   // cheapest as one index over all roots
   private val children: Seq[InMemoryFileIndex] =
-    if (dataRoots.size > 1 && VersionedTable.partColsOf(dataRoots.head).nonEmpty)
+    if (dataRoots.size > 1 && snap.dirLayout.nonEmpty)
       dataRoots.map(r => new InMemoryFileIndex(spark, Seq(r), Map.empty, None))
     else Seq(new InMemoryFileIndex(spark, dataRoots, Map.empty, None))
 
@@ -584,7 +582,7 @@ class GvtFileIndex(
     // monotone generated PARTITION column implies a partition bound —
     // derived here so the child indexes prune directories at planning
     val derivedPF =
-      if (tableRoot.isEmpty || fullSchema.isEmpty) Seq.empty
+      if (fullSchema.isEmpty) Seq.empty
       else GeneratedPruning.derive(spark, tableRoot, fullSchema,
         partitionSchema, dataFilters)
     val base0 = children.flatMap(
@@ -596,8 +594,7 @@ class GvtFileIndex(
     // survive; dirs without a bloom keep everything (sound). A false
     // positive costs a wasted scan, never a wrong answer — the scan
     // still evaluates the full residual filter.
-    val eqs = if (tableRoot.isEmpty) Map.empty[String, Seq[Any]]
-      else GvtFilters.equalities(dataFilters)
+    val eqs = GvtFilters.equalities(dataFilters)
     val base =
       if (eqs.isEmpty) base0
       else {

@@ -91,8 +91,8 @@ class CboSpec extends AnyFunSuite {
       val saved = sess.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
       try {
         // threshold between the scaled LIVE size (~1% of raw) and raw
-        val rawBytes = VersionedTable.chainDataBytes(dim,
-          VersionedTable.latestVersion(dim).get)
+        val rawBytes = VersionedTable.chainDataBytes(
+          VersionedTable.latestSnapshot(dim).get)
         val threshold = math.max(rawBytes / 4L, 4096L)
         sess.conf.set("spark.sql.autoBroadcastJoinThreshold",
           threshold.toString)

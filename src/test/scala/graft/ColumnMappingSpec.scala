@@ -352,8 +352,7 @@ class ColumnMappingSpec extends AnyFunSuite {
       (26 to 28).map(i => (i.toLong, i.toLong * 10, s"n$i"))
         .toDF("k", "val2", "s"), root, allowEvolution = true)       // v5
     val cm = {
-      val m = VersionedTable.colmapAt(root,
-        VersionedTable.latestVersion(root).get).get
+      val m = VersionedTable.latestSnapshot(root).get.colmap.get
       assert(m.ids.contains("s")) // retired physical keeps its id
       m
     }
@@ -414,7 +413,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     VersionedTable.dropColumns(spark, root, Seq("note"))               // v2
     VersionedTable.renameColumn(spark, root, "cents", "amount")        // v3
     VersionedTable.deleteWhereVector(spark, root, col("k") % 5 === 0L) // v4
-    assert(VersionedTable.hasColmap(root, 4L))
+    assert(VersionedTable.snapshot(root, 4L).colmap.isDefined)
     val purged = GraftSession.withExtensions(spark) { sess =>
       sess.sql(s"REORG TABLE gvt.`$root` APPLY (PURGE)")
         .collect().head.getLong(0)
@@ -428,8 +427,8 @@ class ColumnMappingSpec extends AnyFunSuite {
     // physically clean: no mapping, no pending vectors, and the new
     // snapshot's files carry the LOGICAL names — the dropped column's
     // data is gone from storage, not just hidden
-    assert(!VersionedTable.hasColmap(root, purged))
-    assert(VersionedTable.chainDvDirs(root, purged).isEmpty)
+    assert(VersionedTable.snapshot(root, purged).colmap.isEmpty)
+    assert(VersionedTable.snapshot(root, purged).dvDirs.isEmpty)
     val raw = spark.read.parquet(s"$root/v=$purged")
     assert(raw.schema.fieldNames.toSeq == Seq("k", "amount"))
     assert(raw.count() == 48)

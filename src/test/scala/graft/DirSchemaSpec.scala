@@ -19,7 +19,6 @@ class DirSchemaSpec extends AnyFunSuite {
     Files.createTempDirectory("graft_dirschema").toString + "/d"
 
   private def assertMatchesInference(d: String): Unit = {
-    VersionedTable.invalidateElisionCache() // cold memo: exercise the fast path
     val memo = VersionedTable.parquetDirSchema(spark, d)
     val inferred = spark.read.parquet(d).schema
     assert(memo === inferred, s"memoized schema drifted from inference at $d")

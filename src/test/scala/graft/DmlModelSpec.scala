@@ -188,10 +188,9 @@ class DmlModelSpec extends AnyFunSuite {
         assert(got == history(pv), s"trial $trial time travel v=$pv diverged")
       }
       // RETAIN-0 vacuum (version drop + the DV-dead file pass) must
-      // leave the LIVE state and its metadata row count exact, from a
-      // cold elision cache
+      // leave the LIVE state and its metadata row count exact — its own
+      // invalidation makes the next read cold
       VersionedTable.vacuum(root, keep = 1, retainMinMs = 0L)
-      VersionedTable.invalidateElisionCache()
       assert(liveP(root) == model, s"trial $trial diverged after vacuum")
       assert(VersionedTable.metaRowCount(root) == model.size.toLong,
         s"trial $trial metaRowCount diverged after vacuum purge")

@@ -91,7 +91,7 @@ class DvElisionSpec extends AnyFunSuite {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
     }
     rm(dvc)
-    VersionedTable.invalidateElisionCache()
+    VersionedTable.invalidateSnapshots()
     // correctness holds (anti-join still masks), files merely rescan
     assert(VersionedTable.readLatest(spark, root).count() == 0)
     assert(plannedDataFiles(root).exists(_.contains("part=x")),
@@ -130,7 +130,7 @@ class DvElisionSpec extends AnyFunSuite {
         .toDF("id", "s"), root) // v1
       VersionedTable.append((501 to 600).map(i => (i.toLong, s"s$i"))
         .toDF("id", "s"), root) // v2 (chain read, still DV-free)
-      VersionedTable.invalidateElisionCache()
+      VersionedTable.invalidateSnapshots()
       VersionedTable.elisionFooterProbes.set(0L)
       CountingFileStore.clear()
       assert(VersionedTable.readLatest(spark, root).count() == 600)
@@ -163,7 +163,7 @@ class DvElisionSpec extends AnyFunSuite {
       s"_dvc lines must carry the commit-recorded footer total:\n$dvc")
     // cold resolve (all caches dropped): elision decides from the
     // sidecar text — not one footer read
-    VersionedTable.invalidateElisionCache()
+    VersionedTable.invalidateSnapshots()
     VersionedTable.elisionFooterProbes.set(0L)
     val live = VersionedTable.readLatest(spark, root)
     assert(live.count() == 750)
@@ -190,7 +190,7 @@ class DvElisionSpec extends AnyFunSuite {
     java.nio.file.Files.write(dvcPath, legacy.getBytes("UTF-8"))
     val dead = new java.io.File(s"$root/v=1/part=a")
     dead.listFiles().filter(_.isFile).foreach(_.delete())
-    VersionedTable.invalidateElisionCache()
+    VersionedTable.invalidateSnapshots()
     // the read survives: the missing candidate is treated as elided
     // (nothing it could serve is reachable), never a FileNotFound
     val live = VersionedTable.readLatest(spark, root)

@@ -1173,8 +1173,7 @@ class GvtDdlSpec extends AnyFunSuite {
       // redefine UNPARTITIONED, dropping the old partition column
       sess.sql(s"CREATE OR REPLACE TABLE gvt.`$root` (k BIGINT, v INT) " +
         "USING gvt")
-      assert(VersionedTable.layoutOf(root,
-        VersionedTable.latestVersion(root).get).isEmpty,
+      assert(VersionedTable.latestSnapshot(root).get.layout.isEmpty,
         "stale declared layout resurrected across REPLACE")
       assert(!sess.sql(s"SHOW CREATE TABLE gvt.`$root`").first()
         .getString(0).contains("PARTITIONED BY"))

@@ -104,7 +104,7 @@ class PluggableLogStoreSpec extends AnyFunSuite {
       VersionedTable.deleteWhereVector(spark, root, col("k") === 2L)
 
       // cold probe (cache dropped): reads entries + one miss, no listing
-      VersionedTable.invalidateProtocolCache()
+      VersionedTable.invalidateSnapshots()
       CountingFileStore.clear()
       assert(VersionedTable.protocolOf(root) ==
         (Set("dv"), Set("dv", "checkConstraints")))

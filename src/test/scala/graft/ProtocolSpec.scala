@@ -76,7 +76,7 @@ class ProtocolSpec extends AnyFunSuite {
     // invariant (requirements are monotone in normal operation), so the
     // forward-probe tip cache must be dropped explicitly — the same
     // contract as any filesystem metadata cache
-    VersionedTable.invalidateProtocolCache()
+    VersionedTable.invalidateSnapshots()
     assert(VersionedTable.readLatest(spark, root).count() == 1)
   }
 

@@ -43,7 +43,7 @@ class VacuumPurgeSpec extends AnyFunSuite {
     // live partition untouched
     assert(physFiles(root, "v=1/part=b").nonEmpty)
     // reads work from a cold cache (elision by record, no footer read)
-    VersionedTable.invalidateElisionCache()
+    VersionedTable.invalidateSnapshots()
     val live = VersionedTable.readLatest(spark, root)
     assert(live.count() == 300)
     assert(live.filter(col("part") === "a").count() == 0)
@@ -92,7 +92,7 @@ class VacuumPurgeSpec extends AnyFunSuite {
     // before the purge, v1 serves its full 400 rows
     assert(VersionedTable.readVersion(spark, root, 1).count() == 400)
     VersionedTable.vacuum(root, keep = 1, retainMinMs = 0L)
-    VersionedTable.invalidateElisionCache()
+    VersionedTable.invalidateSnapshots()
     val e = intercept[IllegalArgumentException] {
       VersionedTable.readVersion(spark, root, 1).count()
     }
@@ -117,7 +117,7 @@ class VacuumPurgeSpec extends AnyFunSuite {
     saved.foreach { case (name, bytes) =>
       java.nio.file.Files.write(new java.io.File(deadDir, name).toPath, bytes)
     }
-    VersionedTable.invalidateElisionCache()
+    VersionedTable.invalidateSnapshots()
     // recorded-but-present: reads elide by record, counts stay exact
     assert(VersionedTable.readLatest(spark, root).count() == 300)
     assert(VersionedTable.metaRowCount(root) == 300L)
@@ -126,7 +126,7 @@ class VacuumPurgeSpec extends AnyFunSuite {
     VersionedTable.vacuum(root, keep = 1, retainMinMs = 0L)
     assert(physFiles(root, "v=1/part=a").isEmpty,
       "re-run VACUUM must re-delete recorded-but-present leftovers")
-    VersionedTable.invalidateElisionCache()
+    VersionedTable.invalidateSnapshots()
     assert(VersionedTable.readLatest(spark, root).count() == 300)
   }
 

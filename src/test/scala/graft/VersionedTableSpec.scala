@@ -347,14 +347,14 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.history(spark, root)
       .select(col("version")).as[Long].collect().toSeq == (1L to 25L).reverse)
     // bounded reads: checkpoint (1) + tail 21..25 (3 reads each) + hint
-    // resolution — far under the 77 reads of the full walk. The r17
-    // commit-meta memo makes BOTH paths O(1) on a warm cache, so the
-    // checkpoint-vs-walk comparison runs cold (caches cleared)
-    VersionedTable.invalidateElisionCache()
+    // resolution — far under the 77 reads of the full walk. A cached
+    // snapshot serves the chain with no walk at all, so the checkpointed
+    // read runs cold (snapshots dropped); the pure walk ignores the
+    // checkpoint and every cached chain
+    VersionedTable.invalidateSnapshots()
     VersionedTable.metaReads.set(0L)
     VersionedTable.committedVersions(root)
     val bounded = VersionedTable.metaReads.get()
-    VersionedTable.invalidateElisionCache()
     VersionedTable.metaReads.set(0L)
     VersionedTable.committedChain(root, useCheckpoint = false)
     val full = VersionedTable.metaReads.get()
@@ -920,6 +920,34 @@ class VersionedTableSpec extends AnyFunSuite {
     }
   }
 
+  test("shallow clone: a source DELETE + VACUUM invalidates the clone's " +
+    "snapshot through its source root — same rows, no missing file") {
+    val dir = Files.createTempDirectory("graft_vt_clonevac").toString
+    val (src, sh) = (s"$dir/src", s"$dir/shallow")
+    VersionedTable.write((1 to 100).toDF("id")
+      .withColumn("part", col("id") % 4), src, partitionBy = Seq("part")) // v1
+    // v2 carries a deletion vector that fully masks the part=0 files
+    VersionedTable.deleteWhereVector(spark, src, col("part") === 0)      // v2
+    VersionedTable.cloneTable(spark, src, sh, version = Some(2L), shallow = true)
+    def rows() = VersionedTable.readLatest(spark, sh)
+      .select("id").as[Int].collect().sorted.toSeq
+    val before = rows() // warms the clone's snapshot over src v2
+    assert(before == (1 to 100).filter(_ % 4 != 0))
+    val warm = VersionedTable.snapshot(sh, 1L)
+    assert(warm.roots == Set(sh, src))
+    VersionedTable.deleteWhereVector(spark, src, col("id") <= 10)        // v3
+    // retention keeps the cloned v2 (the shallow-clone contract); the
+    // DV-dead pass reclaims the part=0 files masked at or below it
+    VersionedTable.vacuum(src, keep = 2, orphanGraceMs = 0L, retainMinMs = 0L)
+    assert(VersionedTable.purgedEntries(src).nonEmpty,
+      "the vacuum must reclaim the v2-masked files for this case to bite")
+    // no invalidation call: the source's vacuum dropped the clone's
+    // snapshot because its chain reads from the source root
+    assert(!(VersionedTable.snapshot(sh, 1L) eq warm))
+    assert(rows() == before)
+    assert(VersionedTable.readLatest(spark, src).count() == 75 - 8)
+  }
+
   test("generated partition key: computed on every append, pruning trustworthy") {
     val root = Files.createTempDirectory("graft_vt_genpart").toString
     // the canonical Delta use: a derived partition key that writers can
@@ -973,7 +1001,8 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.predicateRanges(col("id") === 1 || col("id") === 999).isEmpty)
     // the locate scan (prunedVersionRead keepMeta) reads only the
     // surviving files — untouched files never reach it
-    val locate = VersionedTable.prunedVersionRead(spark, root, 1L,
+    val locate = VersionedTable.prunedVersionRead(spark,
+      VersionedTable.snapshot(root, 1L),
       VersionedTable.predicateRanges(col("id") >= 301 && col("id") <= 350),
       keepMeta = true)
     assert(locate.inputFiles.length < total,
@@ -1059,7 +1088,8 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.predicateStrRanges(col("grade") >= "G")
       == Seq(("grade", Some("G"), None)))
     // …and the locate scan reads only the matching file(s)
-    val locate = VersionedTable.prunedVersionRead(spark, root, 1L, Seq.empty,
+    val locate = VersionedTable.prunedVersionRead(spark,
+      VersionedTable.snapshot(root, 1L), Seq.empty,
       keepMeta = true,
       strRanges = VersionedTable.predicateStrRanges(col("grade") === "C"))
     assert(locate.inputFiles.length < 8,
