@@ -25,7 +25,15 @@ object RunMedallion {
       .getOrCreate()
     graft.sources.LocalFsInstall.install(spark)
     spark.sparkContext.setLogLevel("WARN")
-    val counts = Medallion.runAll(spark, cfg)
+    val layers = Seq[(String, (SparkSession, Medallion.Config) => Map[String, Long])](
+      "bronze" -> Medallion.runBronze, "silver" -> Medallion.runSilver,
+      "gold" -> Medallion.runGold)
+    val counts = layers.map { case (layer, run) =>
+      val t0 = System.nanoTime()
+      val c = run(spark, cfg)
+      println(f"LAYER $layer s=${(System.nanoTime() - t0) / 1e9}%.3f rows=${c.values.sum}")
+      c
+    }.reduce(_ ++ _)
     counts.toSeq.sortBy(_._1).foreach { case (t, n) => println(s"TABLE $t rows=$n") }
     spark.stop()
   }

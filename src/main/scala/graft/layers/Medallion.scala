@@ -1,8 +1,13 @@
 package graft.layers
 
+import java.util.concurrent.{ExecutionException, Executors}
+import scala.util.{Failure, Try}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import graft.sources.{Tables, InstacartSchemas}
+import org.apache.spark.sql.types.StructType
+import graft.sources.{Tables, InstacartSchemas, VersionedTable}
 import graft.quality.Gates
 import graft.ops.RelationalOps._
 
@@ -20,6 +25,16 @@ import graft.ops.RelationalOps._
   * - Gates run as ONE profiling scan per table ([[Gates.profile]]) instead
   *   of 2 count-jobs per gate (§3 step 4) — same thresholds, same failure
   *   behavior, ~10× fewer jobs on a 100 TB table.
+  * - Independent table builds run concurrently ([[runBuilds]]): the five
+  *   bronze ingests, and the five gold tables over the shared silver
+  *   caches; silver runs its tables in order.
+  * - Silver is write-audit-publish: each gated table is computed and
+  *   written once to a staging dir, the gates audit the staged files, and
+  *   only then does it replace the published table (the reference gates
+  *   the unwritten frame, recomputing it per gate action). A failed gate
+  *   leaves the published table as it was.
+  * - Bronze and silver row counts are the written files' parquet footer
+  *   sums, not count jobs over tables just written.
   */
 object Medallion {
 
@@ -57,31 +72,25 @@ object Medallion {
     * prior+train order_products unioned (01:120-140). */
   def runBronze(spark: SparkSession, cfg: Config): Map[String, Long] = {
     log.info(s"bronze ingest: ${cfg.rawDir} -> ${cfg.bronzeDir}")
-    val tables = Seq(
-      ("orders", InstacartSchemas.orders, "orders.csv"),
-      ("products", InstacartSchemas.products, "products.csv"),
-      ("aisles", InstacartSchemas.aisles, "aisles.csv"),
-      ("departments", InstacartSchemas.departments, "departments.csv"))
-    val counts = tables.map { case (name, schema, file) =>
-      val df = Tables.withBronzeMeta(
-        Tables.readCsv(spark, s"${cfg.rawDir}/$file", schema), file, "v1")
-      Tables.overwrite(df, s"${cfg.bronzeDir}/$name")
-      val n = graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.bronzeDir}/$name").count()
+    def csv(file: String, schema: StructType) =
+      Tables.readCsv(spark, s"${cfg.rawDir}/$file", schema)
+    val sources = Seq(
+      ("orders", csv("orders.csv", InstacartSchemas.orders), "orders.csv"),
+      ("products", csv("products.csv", InstacartSchemas.products), "products.csv"),
+      ("aisles", csv("aisles.csv", InstacartSchemas.aisles), "aisles.csv"),
+      ("departments", csv("departments.csv", InstacartSchemas.departments), "departments.csv"),
+      // prior + train union (positional, same schema)
+      ("order_products", csv("order_products_prior.csv", InstacartSchemas.orderProducts)
+        .union(csv("order_products_train.csv", InstacartSchemas.orderProducts)),
+        "order_products_*.csv"))
+    runBuilds(spark, sources.map { case (name, df, file) => name -> (() => {
+      val dir = s"${cfg.bronzeDir}/$name"
+      Tables.overwrite(Tables.withBronzeMeta(df, file, "v1"), dir)
+      val n = VersionedTable.parquetDirRowCount(dir)
       Gates.assertRowCountNonzero(n, name)
       Gates.logLayerStats("bronze", name, n)
-      name -> n
-    }.toMap
-    // prior + train union (positional, same schema)
-    val prior = Tables.readCsv(spark, s"${cfg.rawDir}/order_products_prior.csv",
-      InstacartSchemas.orderProducts)
-    val train = Tables.readCsv(spark, s"${cfg.rawDir}/order_products_train.csv",
-      InstacartSchemas.orderProducts)
-    val op = Tables.withBronzeMeta(prior.union(train), "order_products_*.csv", "v1")
-    Tables.overwrite(op, s"${cfg.bronzeDir}/order_products")
-    val n = graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.bronzeDir}/order_products").count()
-    Gates.assertRowCountNonzero(n, "order_products")
-    Gates.logLayerStats("bronze", "order_products", n)
-    counts + ("order_products" -> n)
+      n
+    })})
   }
 
   /** Silver orders gate battery, shared by the full-refresh and
@@ -114,46 +123,66 @@ object Medallion {
       "order_time_bucket" -> hourBucket(col("order_hour_of_day")), // 02:80-83
       "_silver_processed_at" -> current_timestamp()))            // 02:84
 
-  /** 02_silver_transform: dedup → gates → enrich → reconcile → write. */
+  /** 02_silver_transform: dedup → enrich → write-audit-publish
+    * ([[writeAuditPublish]]). `orders` is published first: the
+    * order_products RI gate reads it. */
   def runSilver(spark: SparkSession, cfg: Config): Map[String, Long] = {
     log.info(s"silver transform: ${cfg.bronzeDir} -> ${cfg.silverDir}")
+    def bronze(t: String) =
+      Tables.dropBronzeMeta(VersionedTable.readParquetDir(spark, s"${cfg.bronzeDir}/$t"))
+    def bronzeRows(t: String) = VersionedTable.parquetDirRowCount(s"${cfg.bronzeDir}/$t")
     // --- orders (02:44-98) ---
-    val bronzeOrders = Tables.dropBronzeMeta(
-      graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.bronzeDir}/orders"))
-    val sourceOrders = bronzeOrders.count()
-    val ordersDedup = dedupFirst(bronzeOrders, Seq("order_id"),
+    val ordersDedup = dedupFirst(bronze("orders"), Seq("order_id"),
       Seq(col("user_id"), col("order_number")))
-    val nOrders = gateSilverOrders(ordersDedup, cfg, "silver")
-    val ordersEnriched = enrichOrders(ordersDedup)
-    Gates.reconcileRowCounts(sourceOrders, nOrders, cfg.reconDrift, "orders")
-    Tables.overwrite(ordersEnriched, s"${cfg.silverDir}/orders")
+    val nOrders = writeAuditPublish(spark, enrichOrders(ordersDedup),
+      s"${cfg.silverDir}/orders") { (staged, n) =>
+      gateSilverOrders(staged, cfg, "silver")
+      Gates.reconcileRowCounts(bronzeRows("orders"), n, cfg.reconDrift, "orders")
+    }
     Gates.logLayerStats("silver", "orders", nOrders)
 
     // --- order_products (02:104-142) ---
-    val bronzeOp = Tables.dropBronzeMeta(
-      graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.bronzeDir}/order_products"))
-    val sourceOp = bronzeOp.count()
-    val opDedup = dedupFirst(bronzeOp, Seq("order_id", "product_id"),
+    val opEnriched = dedupFirst(bronze("order_products"), Seq("order_id", "product_id"),
       Seq(col("add_to_cart_order")))
-    Gates.checkDuplicateRate(opDedup, Seq("order_id", "product_id"), cfg.duplicateRate)
-    // referential integrity: child FKs must exist in silver orders (02:124)
-    Gates.checkReferentialIntegrity(opDedup, "order_id",
-      graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.silverDir}/orders"), "order_id")
-    val opEnriched = opDedup
       .withColumn("is_reordered", col("reordered") === 1)        // 02:129
       .withColumn("_silver_processed_at", current_timestamp())
-    Gates.reconcileRowCounts(sourceOp, opDedup.count(), cfg.reconDrift, "order_products")
-    Tables.overwrite(opEnriched, s"${cfg.silverDir}/order_products")
+    val nOp = writeAuditPublish(spark, opEnriched,
+      s"${cfg.silverDir}/order_products") { (staged, n) =>
+      Gates.checkDuplicateRate(staged, Seq("order_id", "product_id"), cfg.duplicateRate)
+      // referential integrity: child FKs must exist in silver orders (02:124)
+      Gates.checkReferentialIntegrity(staged, "order_id",
+        VersionedTable.readParquetDir(spark, s"${cfg.silverDir}/orders"), "order_id")
+      Gates.reconcileRowCounts(bronzeRows("order_products"), n, cfg.reconDrift,
+        "order_products")
+    }
 
     // --- lookups passed through with metadata (02:148-175) ---
-    for (name <- Seq("products", "aisles", "departments")) {
-      val df = Tables.dropBronzeMeta(graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.bronzeDir}/$name"))
-        .withColumn("_silver_processed_at", current_timestamp())
-      Tables.overwrite(df, s"${cfg.silverDir}/$name")
-    }
-    val nOp = graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.silverDir}/order_products").count()
+    for (name <- Seq("products", "aisles", "departments"))
+      Tables.overwrite(bronze(name).withColumn("_silver_processed_at", current_timestamp()),
+        s"${cfg.silverDir}/$name")
     Gates.logLayerStats("silver", "order_products", nOp)
     Map("orders" -> nOrders, "order_products" -> nOp)
+  }
+
+  /** Write-audit-publish: `df` is written once to `<target>.staging`,
+    * `audit` gates the staged rows (given their footer row count), and
+    * only then does the staged dir replace `target`. The staging dir is
+    * removed however this ends, so a failed audit leaves `target` as it
+    * was. Returns the published row count. */
+  private def writeAuditPublish(spark: SparkSession, df: DataFrame, target: String)
+                               (audit: (DataFrame, Long) => Unit): Long = {
+    val staged = new Path(s"$target.staging")
+    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      Tables.overwrite(df, staged.toString)
+      val n = VersionedTable.parquetDirRowCount(staged.toString)
+      audit(VersionedTable.readParquetDir(spark, staged.toString), n)
+      val published = new Path(target)
+      fs.delete(published, true)
+      if (!fs.rename(staged, published))
+        throw new java.io.IOException(s"could not publish $staged as $target")
+      n
+    } finally fs.delete(staged, true)
   }
 
   /** 03_gold_metrics (serverless semantics): all FIVE gold tables —
@@ -166,13 +195,12 @@ object Medallion {
     // (reference 03_gold_metrics.py:42-44, 73 — S9); without this each
     // mart re-scans order_products from parquet: 5 full re-reads at 33M+
     // rows (and 100 TB at scale). Lookups stay uncached: they broadcast.
-    val orders = graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.silverDir}/orders")
-      .drop("_silver_processed_at").cache()
-    val op = graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.silverDir}/order_products")
-      .drop("_silver_processed_at").cache()
-    val products = graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.silverDir}/products")
-    val aisles = graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.silverDir}/aisles")
-    val departments = graft.sources.VersionedTable.readParquetDir(spark, s"${cfg.silverDir}/departments")
+    def silver(t: String) = VersionedTable.readParquetDir(spark, s"${cfg.silverDir}/$t")
+    val orders = silver("orders").drop("_silver_processed_at").cache()
+    val op = silver("order_products").drop("_silver_processed_at").cache()
+    val products = silver("products")
+    val aisles = silver("aisles")
+    val departments = silver("departments")
 
     // fct_orders (03_serverless:72-121): 4-way star join, broadcast dims
     val fct = op
@@ -184,10 +212,6 @@ object Medallion {
       .withColumn("aisle_name", col("aisle"))
       .withColumn("department_name", col("department"))
       .withColumn("_gold_computed_at", current_timestamp())
-    // gold snapshots are versioned (time travel + schema gate) — the
-    // Delta-table semantics of the reference, on plain Parquet
-    graft.sources.VersionedTable.write(fct, s"${cfg.goldDir}/fct_orders",
-      allowEvolution = true, partitionBy = Seq("eval_set"))
 
     // dim_users (03_serverless:124-189)
     val orderStats = op.groupBy(col("order_id")).agg(
@@ -213,8 +237,6 @@ object Medallion {
           when(col("avg_basket_size") >= 15, "large")
             .when(col("avg_basket_size") >= 8, "medium").otherwise("small"),
         "_gold_computed_at" -> current_timestamp()))
-    graft.sources.VersionedTable.write(dimUsers, s"${cfg.goldDir}/dim_users",
-      allowEvolution = true)
 
     // dim_products (03_serverless:192-242): per-product stats from the
     // op⋈orders join, LEFT JOINs to the aisle/department hierarchy,
@@ -244,8 +266,6 @@ object Medallion {
           .when(col("times_ordered") >= 1000, "Mid Tier")
           .otherwise("Long Tail"))
       .withColumn("_gold_computed_at", current_timestamp())
-    graft.sources.VersionedTable.write(dimProducts, s"${cfg.goldDir}/dim_products",
-      allowEvolution = true)
 
     // mart_dept_performance (03_serverless:245-308): prior-scope base,
     // department KPIs + day/time-bucket shares + pct-of-grand-total.
@@ -278,8 +298,6 @@ object Medallion {
           sum(col("total_line_items")).over(org.apache.spark.sql.expressions.Window.partitionBy()), 6))
       .withColumn("_gold_computed_at", current_timestamp())
       .orderBy(col("total_line_items").desc)
-    graft.sources.VersionedTable.write(martDept, s"${cfg.goldDir}/mart_dept_performance",
-      allowEvolution = true)
 
     // mart_reorder_velocity (03_serverless:311-371): purchase-sequence rank
     // + previous-purchase reorder flag per (user, product), position
@@ -310,18 +328,48 @@ object Medallion {
       .filter(col("purchase_count") >= cfg.velocityMinPurchases)
       .withColumn("_gold_computed_at", current_timestamp())
       .orderBy(col("product_id"), col("order_position_bucket"))
-    graft.sources.VersionedTable.write(martVelocity, s"${cfg.goldDir}/mart_reorder_velocity",
-      allowEvolution = true)
 
-    val out = Map(
-      "fct_orders" -> graft.sources.VersionedTable.readLatest(spark, s"${cfg.goldDir}/fct_orders").count(),
-      "dim_users" -> graft.sources.VersionedTable.readLatest(spark, s"${cfg.goldDir}/dim_users").count(),
-      "dim_products" -> graft.sources.VersionedTable.readLatest(spark, s"${cfg.goldDir}/dim_products").count(),
-      "mart_dept_performance" -> graft.sources.VersionedTable.readLatest(spark, s"${cfg.goldDir}/mart_dept_performance").count(),
-      "mart_reorder_velocity" -> graft.sources.VersionedTable.readLatest(spark, s"${cfg.goldDir}/mart_reorder_velocity").count())
+    // the caches are built once, before the five builds that share them;
+    // gold snapshots are versioned (time travel + schema gate) — the
+    // Delta-table semantics of the reference, on plain Parquet
+    val out = try {
+      runBuilds(spark, Seq("orders" -> (() => orders.count()),
+        "order_products" -> (() => op.count())))
+      runBuilds(spark, Seq(
+        ("fct_orders", fct, Seq("eval_set")), ("dim_users", dimUsers, Nil),
+        ("dim_products", dimProducts, Nil), ("mart_dept_performance", martDept, Nil),
+        ("mart_reorder_velocity", martVelocity, Nil)).map { case (table, df, parts) =>
+        table -> (() => {
+          val root = s"${cfg.goldDir}/$table"
+          VersionedTable.write(df, root, allowEvolution = true, partitionBy = parts)
+          VersionedTable.readLatest(spark, root).count()
+        })
+      })
+    } finally { orders.unpersist(); op.unpersist() }
     out.foreach { case (table, n) => Gates.logLayerStats("gold", table, n) }
-    orders.unpersist(); op.unpersist()
     out
+  }
+
+  /** Run a layer's independent table builds at once, one pool thread per
+    * build, each with the caller's active session and local properties
+    * (job groups, scheduler pool, tracing tags). Returns once every build
+    * has finished: the results by table, or else the first failure in
+    * table order with the others added as suppressed. */
+  private def runBuilds[A](spark: SparkSession, builds: Seq[(String, () => A)]): Map[String, A] = {
+    val pool = Executors.newFixedThreadPool(builds.size)
+    try {
+      val running = builds.map { case (table, build) =>
+        table -> SQLExecution.withThreadLocalCaptured(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(build())
+      }
+      val done = running.map { case (table, f) =>
+        table -> Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }
+      }
+      done.collect { case (_, Failure(e)) => e } match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ => done.map { case (table, r) => table -> r.get }.toMap
+      }
+    } finally pool.shutdown()
   }
 
   /** Full pipeline: bronze → silver → gold with gates between layers. */

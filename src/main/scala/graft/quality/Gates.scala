@@ -62,9 +62,9 @@ object Gates {
   }
 
   /** G3 `check_referential_integrity` — reference quality.py:97-130.
-    * Rate of non-null child FK values with no matching parent key, via
-    * left_anti join. Parent side is reduced to distinct keys first so a
-    * small-dim parent broadcasts (no shuffle of the child fact). */
+    * Rate of non-null child FK values with no matching parent key. Parent
+    * side is reduced to distinct keys first so a small-dim parent
+    * broadcasts (no shuffle of the child fact). */
   def checkReferentialIntegrity(child: DataFrame, childCol: String,
                                 parent: DataFrame, parentCol: String,
                                 layer: String = "silver",
@@ -76,12 +76,16 @@ object Gates {
     rate
   }
 
+  /** (orphans, non-null child keys) in one pass over the child: non-null
+    * child keys LEFT JOIN distinct parent keys, then one aggregate. */
   private[graft] def orphanCounts(child: DataFrame, childCol: String,
                                   parent: DataFrame, parentCol: String): (Long, Long) = {
-    val c = child.select(col(childCol)).filter(col(childCol).isNotNull)
-    val p = parent.select(col(parentCol)).distinct()
-    val orphans = c.join(p, c(childCol) === p(parentCol), "left_anti").count()
-    (orphans, c.count())
+    val c = child.select(col(childCol).as("_fk")).filter(col("_fk").isNotNull)
+    val p = parent.select(col(parentCol).as("_pk")).distinct()
+    val r = c.join(p, col("_fk") === col("_pk"), "left").agg(
+      count(lit(1)),
+      coalesce(sum(when(col("_pk").isNull, 1L).otherwise(0L)), lit(0L))).head()
+    (r.getLong(1), r.getLong(0))
   }
 
   /** G4 `reconcile_row_counts` — reference quality.py:133-160. Pure scalar:

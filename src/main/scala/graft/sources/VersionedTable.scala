@@ -3628,6 +3628,10 @@ object VersionedTable {
   def readParquetDir(spark: SparkSession, d: String): DataFrame =
     readDirCached(spark, d)
 
+  /** Row count of a plain parquet directory from its files' footers —
+    * what `readParquetDir(spark, d).count()` returns, with no Spark job. */
+  def parquetDirRowCount(d: String): Long = footerRowCount(listDataFiles(d))
+
   /** `spark.read.parquet(dir)` with the memoized schema — no inference
     * job. `basePath` keeps `name=value` partition columns alive across
     * a later union (the readDirs per-dir contract). */

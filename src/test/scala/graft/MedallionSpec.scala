@@ -1,14 +1,37 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.layers.Medallion
 import graft.quality.DataQualityError
 
 /** End-to-end bronze→silver→gold on a generated Instacart-shaped CSV
   * fixture, including the gate-halts-pipeline behavior (README.md:78). */
-class MedallionSpec extends AnyFunSuite {
+class MedallionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
+
+  private def fixtureRoot(name: String, orphanOrderProducts: Boolean = false): String = {
+    val root = Files.createTempDirectory(name).toString
+    Files.createDirectories(Paths.get(s"$root/raw"))
+    writeFixture(s"$root/raw", orphanOrderProducts)
+    root
+  }
+
+  private def under(dir: String): Seq[Path] =
+    Files.walk(Paths.get(dir)).iterator.asScala.toSeq
+
+  private def drainEvents(): Unit =
+    org.apache.spark.sql.graft.NativeColumns.drainListenerBus(spark)
 
   private def writeFixture(dir: String, orphanOrderProducts: Boolean = false): Unit = {
     def w(name: String, lines: Seq[String]): Unit =
@@ -94,5 +117,78 @@ class MedallionSpec extends AnyFunSuite {
     intercept[DataQualityError](Medallion.runSilver(spark, c))
     // gate fired BEFORE the silver order_products write (halt semantics)
     assert(!Files.exists(Paths.get(s"${c.silverDir}/order_products")))
+    // the audited staging files are gone; orders, which passed, is published
+    assert(!under(c.silverDir).exists(_.getFileName.toString.endsWith(".staging")))
+    assert(graft.sources.VersionedTable.readParquetDir(spark, s"${c.silverDir}/orders")
+      .count() == 6)
+  }
+
+  test("an empty bronze source fails the layer after every table build has finished") {
+    val root = fixtureRoot("graft_medallion_empty")
+    Files.write(Paths.get(s"$root/raw/aisles.csv"), "aisle_id,aisle".getBytes)
+    val c = cfg(root)
+    val e = intercept[DataQualityError](Medallion.runBronze(spark, c))
+    assert(e.getMessage.contains("aisles"))
+    assert(!under(c.bronzeDir).exists(_.getFileName.toString == "_temporary"))
+    for (t <- Seq("orders", "products", "departments", "order_products"))
+      assert(Files.exists(Paths.get(s"${c.bronzeDir}/$t/_SUCCESS")), t)
+  }
+
+  test("silver computes each deduped table once; bronze and silver count no output") {
+    val c = cfg(fixtureRoot("graft_medallion_once"))
+    val plans = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+    }
+    def executed(run: => Unit): Seq[QueryExecution] = {
+      drainEvents(); plans.clear(); run; drainEvents()
+      plans.asScala.toSeq
+    }
+    // a plan whose only result is a row count of files under `dir`
+    def countsRowsUnder(dir: String)(qe: QueryExecution): Boolean = qe.optimizedPlan match {
+      case a: Aggregate if a.groupingExpressions.isEmpty &&
+          a.aggregateExpressions.forall(_.find(_.isInstanceOf[Count]).isDefined) =>
+        val canon = new java.io.File(dir).getCanonicalPath
+        a.collectLeaves().forall {
+          case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+            h.location.rootPaths.forall(_.toUri.getPath.startsWith(canon + "/"))
+          case _ => false
+        }
+      case _ => false
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val bronze = executed(Medallion.runBronze(spark, c))
+      val silver = executed(Medallion.runSilver(spark, c))
+      assert(silver.count(qe => find(qe.executedPlan)(_.isInstanceOf[WindowExec]).isDefined) == 2)
+      assert(!bronze.exists(countsRowsUnder(c.bronzeDir)))
+      assert(!silver.exists(countsRowsUnder(c.silverDir)))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("jobs of the concurrent table builds carry the caller's local properties") {
+    val c = cfg(fixtureRoot("graft_medallion_props"))
+    val sc = spark.sparkContext
+    val tags = new ConcurrentLinkedQueue[Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(Option(e.properties).flatMap(p => Option(p.getProperty("medallion.spec.caller"))))
+    }
+    Medallion.runBronze(spark, c)
+    Medallion.runSilver(spark, c)
+    drainEvents()
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("medallion.spec.caller", "pipeline")
+    try {
+      Medallion.runBronze(spark, c)
+      Medallion.runGold(spark, c)
+      drainEvents()
+    } finally {
+      sc.setLocalProperty("medallion.spec.caller", null)
+      sc.removeSparkListener(listener)
+    }
+    assert(!tags.isEmpty)
+    assert(tags.asScala.forall(_.contains("pipeline")))
   }
 }
