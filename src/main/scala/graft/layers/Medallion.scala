@@ -269,8 +269,10 @@ object Medallion {
 
     // mart_dept_performance (03_serverless:245-308): prior-scope base,
     // department KPIs + day/time-bucket shares + pct-of-grand-total.
-    // The grand total is derived from the aggregated frame itself (window
-    // over the ~21-row result) so the base join executes once.
+    // The grand total is derived from the aggregated frame itself, so the
+    // base join executes once: the ~21 department rows gather into one
+    // row beside their total and explode back (an unpartitioned window
+    // would do the same, with a Spark WARN on every run).
     val deptBase = op
       .join(orders.filter(col("eval_set") === "prior")
         .select("order_id", "user_id", "order_day_name", "order_time_bucket"), Seq("order_id"))
@@ -292,10 +294,14 @@ object Medallion {
         rnd(share(col("order_time_bucket") === "Afternoon"), 4).as("pct_afternoon"),
         rnd(share(col("order_time_bucket") === "Evening"), 4).as("pct_evening"),
         rnd(share(col("order_time_bucket") === "Night"), 4).as("pct_night"))
+    val deptCols = deptAgg.columns.toSeq
     val martDept = deptAgg
-      .withColumn("pct_of_total_items",
-        rnd(col("total_line_items") /
-          sum(col("total_line_items")).over(org.apache.spark.sql.expressions.Window.partitionBy()), 6))
+      .agg(collect_list(struct(deptCols.map(col): _*)).as("d"),
+        sum(col("total_line_items")).as("grand_total"))
+      .select(explode(col("d")).as("d"), col("grand_total"))
+      .select(deptCols.map(c => col(s"d.$c")) :+
+        rnd(col("d.total_line_items") / col("grand_total"), 6)
+          .as("pct_of_total_items"): _*)
       .withColumn("_gold_computed_at", current_timestamp())
       .orderBy(col("total_line_items").desc)
 

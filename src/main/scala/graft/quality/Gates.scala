@@ -26,17 +26,8 @@ object Gates {
   /** G1 `check_null_rate` — reference quality.py:28-62.
     * Fraction of rows where `column` is null; fails above `threshold`. */
   def checkNullRate(df: DataFrame, column: String, threshold: Double,
-                    layer: String = "silver"): Double = {
-    val rate = nullRateAgg(df, column)
-    gate(rate <= threshold,
-      f"[$layer] null_rate($column)=$rate%.6f exceeds threshold $threshold%.6f")
-    rate
-  }
-
-  /** Single-pass null rate: avg over the 0/1 null indicator. Empty input → 0.0. */
-  private[graft] def nullRateAgg(df: DataFrame, column: String): Double =
-    df.agg(coalesce(avg(when(col(column).isNull, 1.0).otherwise(0.0)), lit(0.0)))
-      .head.getDouble(0)
+                    layer: String = "silver"): Double =
+    gateNullRate(profile(df, Seq(column))._2(column), column, threshold, layer)
 
   /** G2 `check_duplicate_rate` — reference quality.py:65-94.
     * Fraction of rows belonging to a key-group of size > 1. Accepts a

@@ -147,7 +147,7 @@ object RelationalQueries {
         col("o_orderstatus").as("status"))
       val root = s"$out/t"
       graft.sources.VersionedTable.write(o, root)
-      graft.sources.VersionedTable.deleteWhere(s, root, col("k") % 13 === 0)
+      graft.sources.VersionedTable.deleteWhereVector(s, root, col("k") % 13 === 0)
       s.sql(s"CREATE OR REPLACE TEMPORARY VIEW gvt_tt_v1 USING gvt " +
         s"OPTIONS (path '$root', versionAsOf '1')")
       s.sql(s"CREATE OR REPLACE TEMPORARY VIEW gvt_tt_live USING gvt " +
@@ -466,8 +466,8 @@ object RelationalQueries {
         floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"))
       val root = s"$out/t"
       graft.sources.VersionedTable.write(o, root)
-      graft.sources.VersionedTable.deleteWhere(s, root, col("k") % 13 === 0)
-      graft.sources.VersionedTable.updateWhere(s, root, col("k") % 7 === 0,
+      graft.sources.VersionedTable.deleteWhereVector(s, root, col("k") % 13 === 0)
+      graft.sources.VersionedTable.updateWhereVector(s, root, col("k") % 7 === 0,
         Map("cents" -> (col("cents") + 100000L)))
       graft.sources.VersionedTable.changes(s, root, 1L, 3L, Seq("k"))
         .groupBy(col("_change_type")).agg(count(lit(1)).as("n"))
@@ -478,7 +478,7 @@ object RelationalQueries {
     // `_dv_parent` links, so the feed reconstructs from each commit's
     // own artifacts (touched files ⋉ _dv positions, diffed against the
     // commit slice) — never a base rescan. Classification must equal
-    // q_delete_update's full-rewrite arithmetic.
+    // q_delete_update's two-hop snapshot-diff arithmetic.
     "q_cdf_dv_feed" -> ((s, dir) => {
       val out = tmpDir("graft_cdfdv")
       val o = t(s, dir, "orders").select(col("o_orderkey").as("k"),
@@ -564,8 +564,8 @@ object RelationalQueries {
         floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cents"))
       val root = s"$out/t"
       graft.sources.VersionedTable.write(o, root)
-      graft.sources.VersionedTable.deleteWhere(sess, root, col("k") % 13 === 0)
-      graft.sources.VersionedTable.updateWhere(sess, root, col("k") % 7 === 0,
+      graft.sources.VersionedTable.deleteWhereVector(sess, root, col("k") % 13 === 0)
+      graft.sources.VersionedTable.updateWhereVector(sess, root, col("k") % 7 === 0,
         Map("cents" -> (col("cents") + 100000L)))
       sess.sql(s"""SELECT _change_type, count(*) AS n
         FROM table_changes('$root', 1, 3, 'k')

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
+import org.apache.hadoop.fs.{FileContext, FileStatus, Options, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -499,7 +499,7 @@ object VersionedTable {
 
   /** The newest committed version's value for meta file `name`, walking
     * the chain TIP-BACKWARD — not just the tip: a non-sink commit
-    * (merge / deleteWhere / a write without metaFiles) interleaved
+    * (merge / DELETE / a write without metaFiles) interleaved
     * between a sink's batches carries no watermark, and a tip-only read
     * would resolve to None and let a crash-replayed micro-batch
     * double-apply. The walk is checkpoint-bounded metadata work and
@@ -786,9 +786,9 @@ object VersionedTable {
 
   /** Register an identity column. On an existing table the column may
     * be new (rows before registration read NULL until backfilled — run
-    * one `updateWhere` if gapless history matters) or an existing
-    * BIGINT column (future writes fill its NULLs). `step` must be
-    * non-zero; negative steps count down. */
+    * one `updateWhereVector` assigning it if gapless history matters)
+    * or an existing BIGINT column (future writes fill its NULLs). `step`
+    * must be non-zero; negative steps count down. */
   def addIdentityColumn(spark: SparkSession, root: String, name: String,
                         start: Long = 1L, step: Long = 1L): Unit = {
     require(step != 0L, "identity step must be non-zero")
@@ -1579,7 +1579,7 @@ object VersionedTable {
         // Spark jobs. Touched-file-count-sized: the Delta-log driver
         // class (Delta drivers hold full file manifests).
         if (name == "_dv") {
-          val counts = readDirCached(sdf.sparkSession, s"$root/v=$next/_dv")
+          val counts = readSidecar(sdf.sparkSession, Seq(s"$root/v=$next/_dv"))
             .groupBy("_dv_file").count().collect()
             .map(r => (r.getString(0), r.getLong(1))).toSeq
           dvCounts = Some(counts)
@@ -1812,7 +1812,7 @@ object VersionedTable {
     import org.apache.spark.sql.functions.col
     val p = new HPath(s"$dir/_bloom")
     if (!fcOf(p).util.exists(p)) return None
-    val bloom = readDirCached(spark, s"$dir/_bloom")
+    val bloom = readSidecar(spark, Seq(s"$dir/_bloom"))
     if (!bloom.schema.fieldNames.contains("colname")) return None
     // m is not stored: derive it as the next power of two above the
     // max position is WRONG (positions are data-dependent) — store m
@@ -1943,13 +1943,7 @@ object VersionedTable {
       val hiOk = hi.map(h => col(s"smin_$c") <= lit(h))
       (Seq(base) ++ loOk ++ hiOk).reduce(_ && _)
     }).reduce(_ && _)
-    val statSchemas = statted.map(d => parquetDirSchema(spark, s"$d/_stats"))
-    val statsDf =
-      if (statSchemas.forall(_ == statSchemas.head))
-        spark.read.schema(statSchemas.head)
-          .parquet(statted.map(d => s"$d/_stats"): _*)
-      else spark.read.parquet(statted.map(d => s"$d/_stats"): _*)
-    val files0 = statsDf
+    val files0 = readSidecar(spark, statted.map(d => s"$d/_stats"))
       .filter(pred).select("file").collect().map(_.getString(0)).toSeq
     // Bloom refinement: a string EQUALITY predicate (lo == hi) also
     // probes each dir's `_bloom` sidecar — the type-exact case (a
@@ -2186,7 +2180,7 @@ object VersionedTable {
     val num = scala.collection.mutable.Map.empty[String, Map[String, (Double, Double)]]
     val str = scala.collection.mutable.Map.empty[String, Map[String, StrStats]]
     dirs.foreach { d =>
-      val df = readDirCached(spark, s"$d/_stats")
+      val df = readSidecar(spark, Seq(s"$d/_stats"))
       val fields = df.schema.fieldNames.toSet
       val nCols = df.schema.fieldNames.filter(_.startsWith("min_"))
         .map(_.stripPrefix("min_")).filter(c => fields(s"max_$c")).toSeq
@@ -2475,16 +2469,14 @@ object VersionedTable {
     * the chain unions the new copies in and anti-joins the old
     * positions out — the same resolution [[deleteWhereVector]] uses, so
     * stacking, compaction, time travel, vacuum, and the change feed all
-    * compose unchanged ([[updateWhere]] remains the O(table) full-
-    * rewrite alternative). Returns the new version. */
+    * compose unchanged. Returns the new version. */
   def updateWhereVector(spark: SparkSession, root: String,
                         predicate: org.apache.spark.sql.Column,
                         assignments: Map[String, org.apache.spark.sql.Column],
                         locateJoins: Seq[LocateSemiJoin] = Seq.empty,
                         scalarJoins: Seq[LocateScalarJoin] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     val snap = liveSnapshot(root)
-    val v = snap.version
     // locate scan zone-map-pruned by the bounds the predicate implies:
     // an O(changed) commit pays only O(pruned) read, not O(table)
     val live = prunedVersionRead(spark, snap,
@@ -2494,45 +2486,32 @@ object VersionedTable {
     val scan = applyScalarJoins(live, scalarJoins)
     val csCols = scalarJoinCols(scalarJoins)
     val hit0 = applyLocateJoins(scan.filter(predicate), locateJoins)
+    // the scalar-join scratch columns are visible to the RHS and
+    // excluded from the output
+    val outCols = hit0.columns
+      .filterNot(Set("__gvt_file", "__gvt_pos") ++ csCols)
+    assignments.keys.foreach(c => require(outCols.contains(c),
+      s"UPDATE assigns unknown column $c"))
     val hit = if (!cdf) hit0
       else hit0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dv = hit.select(col("__gvt_file").as("_dv_file"),
-        col("__gvt_pos").as("_dv_pos"))
-      // SIMULTANEOUS assignment (SQL UPDATE semantics): every RHS reads
-      // the OLD row — one select, never a sequential withColumn fold
-      // (which would let `SET a = b, b = a` read a's NEW value). The
-      // scalar-join scratch columns are visible to the RHS and
-      // excluded from the output.
-      val base = hit.drop("__gvt_file", "__gvt_pos")
-      val outCols = base.columns.filterNot(csCols.contains)
-      assignments.keys.foreach(c => require(outCols.contains(c),
-        s"UPDATE assigns unknown column $c"))
-      val updated = base.select(outCols.map(c =>
-        assignments.get(c).map(_.as(c)).getOrElse(col(c))).toSeq: _*)
-      // change-data sidecar: pre/post image pairs captured AT COMMIT —
-      // the only point the pairing exists without row identity
-      val cdfRows =
-        if (!cdf) Map.empty[String, DataFrame]
-        else {
-          import org.apache.spark.sql.functions.lit
-          Map("_cdf" ->
-            base.drop(csCols: _*)
-              .withColumn("_change_type", lit("update_preimage"))
-              .unionByName(updated
-                .withColumn("_change_type", lit("update_postimage"))))
-        }
-      // the updated slice keeps the table's hive layout (Delta rewrites
-      // files within their partitions): partition pruning keeps working
-      // on the rewritten rows, and the chain never mixes flat and hive
-      // members. Updating a PARTITION column itself moves the row to
-      // its new directory — also the Delta behavior.
-      write(updated, root, partitionBy = snap.layout,
-        metaFiles = Map("_dv_parent" -> v.toString),
-        subdirWrites = Map("_dv" -> dv) ++ cdfRows,
-        baseVersion = Some(v), operation = "UPDATE_DV",
-        assignIdentity = false)
-    } finally if (cdf) { hit.unpersist(); () }
+    // SIMULTANEOUS assignment (SQL UPDATE semantics): every RHS reads
+    // the OLD row — one select, never a sequential withColumn fold
+    // (which would let `SET a = b, b = a` read a's NEW value)
+    val base = hit.drop("__gvt_file", "__gvt_pos")
+    val updated = base.select(outCols.map(c =>
+      assignments.get(c).map(_.as(c)).getOrElse(col(c))).toSeq: _*)
+    // the updated slice keeps the table's hive layout (Delta rewrites
+    // files within their partitions): partition pruning keeps working
+    // on the rewritten rows, and the chain never mixes flat and hive
+    // members. Updating a PARTITION column itself moves the row to its
+    // new directory — also the Delta behavior. The change-data sidecar
+    // holds pre/post image pairs captured AT COMMIT — the only point
+    // the pairing exists without row identity.
+    commitDv(spark, snap, hit, Some(updated), "UPDATE_DV",
+      cdf = Option.when(cdf)(base.drop(csCols: _*)
+        .withColumn("_change_type", lit("update_preimage"))
+        .unionByName(updated
+          .withColumn("_change_type", lit("update_postimage")))))
   }
 
   /** Predicate-scoped overwrite (Delta `replaceWhere` analogue):
@@ -2550,9 +2529,8 @@ object VersionedTable {
   def replaceWhere(spark: SparkSession, root: String,
                    predicate: org.apache.spark.sql.Column,
                    df0: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     val snap = liveSnapshot(root)
-    val v = snap.version
     // the validation scan below plus the write would compute an
     // expensive upstream `df0` TWICE — persist for the operation's span
     // (skipped if the caller already cached it)
@@ -2572,28 +2550,17 @@ object VersionedTable {
       val hit0 = live.filter(predicate)
       val hit = if (!cdf) hit0
         else hit0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val dv = hit
-          .select(col("__gvt_file").as("_dv_file"), col("__gvt_pos").as("_dv_pos"))
-        // Delta's replaceWhere CDC shape: replaced rows as deletes, the
-        // incoming batch as inserts (no key concept, no update pairing)
-        val cdfRows =
-          if (!cdf) Map.empty[String, DataFrame]
-          else {
-            import org.apache.spark.sql.functions.lit
-            Map("_cdf" -> hit.drop("__gvt_file", "__gvt_pos")
-              .withColumn("_change_type", lit("delete"))
-              .unionByName(df.withColumn("_change_type", lit("insert")),
-                allowMissingColumns = true))
-          }
-        // keep the table's hive layout (see updateWhereVector): the
-        // replacing batch lands in its partitions, never a flat dir
-        // stacked on a hive chain
-        write(df, root, partitionBy = snap.layout,
-          metaFiles = Map("_dv_parent" -> v.toString),
-          subdirWrites = Map("_dv" -> dv) ++ cdfRows,
-          baseVersion = Some(v), operation = "REPLACE_WHERE")
-      } finally if (cdf) { hit.unpersist(); () }
+      // the replacing batch lands in the table's hive layout (see
+      // updateWhereVector) and, being arriving data, takes identity
+      // values. Delta's replaceWhere CDC shape: replaced rows as
+      // deletes, the incoming batch as inserts (no key concept, no
+      // update pairing).
+      commitDv(spark, snap, hit, Some(df), "REPLACE_WHERE",
+        cdf = Option.when(cdf)(hit.drop("__gvt_file", "__gvt_pos")
+          .withColumn("_change_type", lit("delete"))
+          .unionByName(df.withColumn("_change_type", lit("insert")),
+            allowMissingColumns = true)),
+        assignIdentity = true)
     } finally if (!precached) df.unpersist()
   }
 
@@ -2667,44 +2634,6 @@ object VersionedTable {
 
   def txnVersion(root: String, appId: String): Option[Long] =
     readMetaLatest(root, txnKey(appId)).map(_.trim.toLong)
-
-  /** Row-level DELETE (Delta `DELETE FROM t WHERE p` analogue): commit a
-    * new snapshot without the matching rows. Full-rewrite cost model
-    * (this table keeps whole-snapshot versions); conditional on the
-    * snapshot it read, so a concurrent writer conflicts rather than
-    * resurrecting deleted rows. The removed rows surface as `delete`
-    * rows in [[changes]] and stay time-travelable until vacuumed —
-    * exactly Delta's semantics. Returns the new version. */
-  def deleteWhere(spark: SparkSession, root: String,
-                  predicate: org.apache.spark.sql.Column): Long = {
-    val snap = liveSnapshot(root)
-    write(readSnapshot(spark, snap).filter(!predicate), root,
-      partitionBy = snap.layout,
-      baseVersion = Some(snap.version), operation = "DELETE",
-      assignIdentity = false)
-  }
-
-  /** Row-level UPDATE (Delta `UPDATE t SET c = e WHERE p` analogue):
-    * commit a new snapshot with `assignments` applied to matching rows;
-    * non-matching rows pass through untouched. Updated rows surface as
-    * preimage/postimage pairs in [[changes]]. Returns the new version. */
-  def updateWhere(spark: SparkSession, root: String,
-                  predicate: org.apache.spark.sql.Column,
-                  assignments: Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{col, when}
-    val snap = liveSnapshot(root)
-    val rows = readSnapshot(spark, snap)
-    // simultaneous assignment — see updateWhereVector
-    assignments.keys.foreach(c => require(rows.columns.contains(c),
-      s"UPDATE assigns unknown column $c"))
-    val updated = rows.select(rows.columns.map(c =>
-      assignments.get(c)
-        .map(e => when(predicate, e).otherwise(col(c)).as(c))
-        .getOrElse(col(c))).toSeq: _*)
-    write(updated, root, partitionBy = snap.layout,
-      baseVersion = Some(snap.version), operation = "UPDATE",
-      assignIdentity = false)
-  }
 
   /** Row-level CHANGE DATA FEED between two snapshots (Delta CDF
     * analogue): every key classified insert / delete / update, updates
@@ -2810,7 +2739,7 @@ object VersionedTable {
     if (to.meta("_dv_parent").map(_.trim.toLong).contains(fromV)) {
       val cdfDir = new HPath(s"$root/v=$toV/_cdf")
       if (fcOf(cdfDir).util.exists(cdfDir))
-        return readDirCached(spark, cdfDir.toString)
+        return readSidecar(spark, Seq(cdfDir.toString))
       if (op.startsWith("DELETE_DV"))
         return dvRemovedRows(spark, to, fromV)
           .withColumn("_change_type", lit("delete"))
@@ -2829,7 +2758,7 @@ object VersionedTable {
     val cdfDir = new HPath(s"$root/v=$toV/_cdf")
     if (to.chain.last.prev.contains(fromV) &&
         fcOf(cdfDir).util.exists(cdfDir))
-      return readDirCached(spark, cdfDir.toString)
+      return readSidecar(spark, Seq(cdfDir.toString))
     refuse()
   }
 
@@ -2890,9 +2819,8 @@ object VersionedTable {
     * restriction, factored for the keyless paths. */
   private def dvRemovedRows(spark: SparkSession, to: Snapshot,
                             fromV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val (root, toV) = (to.root, to.version)
-    val dv = readDirCached(spark, s"$root/v=$toV/_dv")
+    val dv = readSidecar(spark, Seq(s"$root/v=$toV/_dv"))
     val files = dv.select("_dv_file").distinct()
       .collect().map(_.getString(0)).toSeq
     // a hop whose touched files the vacuum's file-granular pass already
@@ -2913,10 +2841,7 @@ object VersionedTable {
         val partitioned = snapshot(root, fromV).layout.nonEmpty
         val reads = readFileGroups(spark, files, partitioned, withRowIds)
         val tagged = reads.reduce(_.unionByName(_, allowMissingColumns = true))
-        tagged.join(dv,
-          tagged("__gvt_file") === dv("_dv_file") &&
-            tagged("__gvt_pos") === dv("_dv_pos"), "left_semi")
-          .drop("__gvt_file", "__gvt_pos")
+        joinDv(tagged, dv, "left_semi").drop("__gvt_file", "__gvt_pos")
       }
     mapToLogical(spark, old, to)
   }
@@ -3641,6 +3566,35 @@ object VersionedTable {
     (if (basePath) r.option("basePath", d) else r).parquet(d)
   }
 
+  /** A version dir's `_`-prefixed Parquet payload (`_dv`, `_stats`,
+    * `_bloom`, `_cdf`) across `dirs`, read from the payloads' listed
+    * data files with the memoized schema: Spark is never handed the
+    * hidden dir itself, which it skips with an "All paths were ignored"
+    * warning. Dirs of one schema read as one scan; a mix (a legacy
+    * chain) reads per schema and NULL-pads by name. */
+  private def readSidecar(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val schemas = dirs.map(parquetDirSchema(spark, _))
+    schemas.distinct.map { schema =>
+      val files = dirs.zip(schemas).collect { case (d, `schema`) => d }
+        .flatMap(listDataStatuses)
+      // the index is handed this listing: past 32 paths
+      // (`parallelPartitionDiscovery.threshold`) `spark.read` would list
+      // the files again in a Spark job
+      val listed = new FileStatusCache {
+        private val byPath = files.map(f => f.getPath -> Array(f)).toMap
+        override def getLeafFiles(p: HPath): Option[Array[FileStatus]] = byPath.get(p)
+        override def putLeafFiles(p: HPath, fs: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty, Some(schema), listed),
+        new StructType(), schema, None, new ParquetFileFormat, Map.empty)(spark))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
   /** A zero-row frame with the snapshot's LOGICAL schema — the schema
     * anchor the DML/maintenance commits and CDF empty returns need,
     * built from the resolved schema instead of constructing (and
@@ -3675,6 +3629,50 @@ object VersionedTable {
     s.colmap.map(applyColmap(raw, _)).getOrElse(raw)
   }
 
+  // ── Deletion-vector commits ──────────────────────────────────────
+  //
+  // A DV commit's version dir holds its data slice, a `_dv_parent` link
+  // to the version it masks, and the `_dv` payload: one
+  // `(_dv_file, _dv_pos)` row per masked row, in the `_metadata`
+  // file-path / row-index form [[withRowIds]] tags rows with. write()
+  // derives the `_dvc` counts from the payload. [[commitDv]] is the one
+  // producer; [[applyDv]] and [[dvRemovedRows]] read the payload back
+  // through [[readSidecar]] and join it with [[joinDv]].
+
+  /** Commit a deletion-vector version over `snap`: the `located` rows'
+    * `(__gvt_file, __gvt_pos)` provenance becomes the `_dv` payload and
+    * `data` the version's slice in the table's layout (None: a DELETE's
+    * zero-row schema anchor, written flat). `cdf` rides as the `_cdf`
+    * change-data sidecar; `metaFiles` add to `_dv_parent`. `located` is
+    * released afterwards; `data` and `operation` are evaluated inside
+    * that scope, so a slice that fails to build still releases it. */
+  private def commitDv(spark: SparkSession, snap: Snapshot,
+                       located: DataFrame, data: => Option[DataFrame],
+                       operation: => String,
+                       cdf: Option[DataFrame] = None,
+                       statsCols: Seq[String] = Seq.empty,
+                       metaFiles: Map[String, String] = Map.empty,
+                       assignIdentity: Boolean = false): Long = {
+    import org.apache.spark.sql.functions.col
+    try {
+      val slice = data
+      write(slice.getOrElse(emptySnapshot(spark, snap)), snap.root,
+        partitionBy = if (slice.isDefined) snap.layout else Seq.empty,
+        statsCols = statsCols,
+        metaFiles = metaFiles + ("_dv_parent" -> snap.version.toString),
+        subdirWrites = Map("_dv" -> located.select(
+          col("__gvt_file").as("_dv_file"), col("__gvt_pos").as("_dv_pos"))) ++
+          cdf.map("_cdf" -> _),
+        baseVersion = Some(snap.version), operation = operation,
+        assignIdentity = assignIdentity)
+    } finally { located.unpersist(); () }
+  }
+
+  /** `tagged` rows joined to deletion vector `dv` on (file, row-position). */
+  private def joinDv(tagged: DataFrame, dv: DataFrame, how: String): DataFrame =
+    tagged.join(dv, tagged("__gvt_file") === dv("_dv_file") &&
+      tagged("__gvt_pos") === dv("_dv_pos"), how)
+
   /** Drop the rows named by the chain's deletion vectors: one anti-join
     * on (file, row-position). The vector side is deleted-rows-sized —
     * Spark broadcasts it below the threshold, exactly the read-cost
@@ -3682,18 +3680,7 @@ object VersionedTable {
   private def applyDv(spark: SparkSession, tagged: DataFrame,
                       dvDirs: Seq[String],
                       keepMeta: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    // the vector payload schema is a per-dir constant — explicit schema
-    // skips the per-construction inference job (plain inference only if
-    // a legacy chain ever mixed shapes)
-    val dvSchemas = dvDirs.map(parquetDirSchema(spark, _))
-    val dv =
-      if (dvSchemas.forall(_ == dvSchemas.head))
-        spark.read.schema(dvSchemas.head).parquet(dvDirs: _*)
-      else spark.read.parquet(dvDirs: _*)
-    val joined = tagged.join(dv,
-      tagged("__gvt_file") === dv("_dv_file") &&
-        tagged("__gvt_pos") === dv("_dv_pos"), "left_anti")
+    val joined = joinDv(tagged, readSidecar(spark, dvDirs), "left_anti")
     if (keepMeta) joined else joined.drop("__gvt_file", "__gvt_pos")
   }
 
@@ -3899,8 +3886,7 @@ object VersionedTable {
     * deletion-vector analogue): O(delete) commit cost at ANY table size
     * — the new version stores only the (file, row-position) pairs of
     * the deleted rows (`_dv` parquet payload) plus an empty schema
-    * slice; the parent snapshot's files are never rewritten (the
-    * [[deleteWhere]] full-rewrite alternative costs O(table)). Readers
+    * slice; the parent snapshot's files are never rewritten. Readers
     * anti-join the chain's vectors on parquet row positions
     * (`_metadata.file_path` / `row_index`); stacked DV commits compose;
     * [[compact]] materializes the vectors away (the OPTIMIZE pairing
@@ -3914,9 +3900,8 @@ object VersionedTable {
                         predicate: org.apache.spark.sql.Column,
                         locateJoins: Seq[LocateSemiJoin] = Seq.empty,
                         scalarJoins: Seq[LocateScalarJoin] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     val snap = liveSnapshot(root)
-    val v = snap.version
     // locate scan zone-map-pruned by the predicate's implied bounds
     val live = prunedVersionRead(spark, snap,
       predicateRanges(predicate), keepMeta = true,
@@ -3926,19 +3911,10 @@ object VersionedTable {
       applyScalarJoins(live, scalarJoins).filter(predicate), locateJoins)
     val hit = if (!cdf) hit0
       else hit0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dv = hit
-        .select(col("__gvt_file").as("_dv_file"), col("__gvt_pos").as("_dv_pos"))
-      val cdfRows =
-        if (!cdf) Map.empty[String, DataFrame]
-        else Map("_cdf" -> hit.drop(
-            "__gvt_file" +: "__gvt_pos" +: scalarJoinCols(scalarJoins): _*)
-          .withColumn("_change_type", lit("delete")))
-      write(emptySnapshot(spark, snap), root,
-        metaFiles = Map("_dv_parent" -> v.toString),
-        subdirWrites = Map("_dv" -> dv) ++ cdfRows,
-        baseVersion = Some(v), operation = "DELETE_DV")
-    } finally if (cdf) { hit.unpersist(); () }
+    commitDv(spark, snap, hit, None, "DELETE_DV",
+      cdf = Option.when(cdf)(hit.drop(
+          "__gvt_file" +: "__gvt_pos" +: scalarJoinCols(scalarJoins): _*)
+        .withColumn("_change_type", lit("delete"))))
   }
 
   /** Delta `delta.enableChangeDataFeed` analogue: when set, DML commits
@@ -4487,17 +4463,9 @@ object VersionedTable {
         math.ceil(cands.map(_._2).sum.toDouble / targetFileBytes).toInt)
       val hitS = readLiveFiles(spark, snap, cands.map(_._1),
         partitioned = true)
-      try {
-        val dv = hitS.select(col("__gvt_file").as("_dv_file"),
-          col("__gvt_pos").as("_dv_pos"))
-        val data = hitS.drop("__gvt_file", "__gvt_pos")
-        return write(data.coalesce(n), root, partitionBy = parts,
-          metaFiles = Map("_dv_parent" -> v.toString),
-          subdirWrites = Map("_dv" -> dv),
-          baseVersion = Some(v),
-          operation = s"OPTIMIZE_WHERE(small<${minB}B,n=${cands.size})",
-          assignIdentity = false)
-      } finally { hitS.unpersist(); () }
+      return commitDv(spark, snap, hitS,
+        Some(hitS.drop("__gvt_file", "__gvt_pos").coalesce(n)),
+        s"OPTIMIZE_WHERE(small<${minB}B,n=${cands.size})")
     }
     // size the bin-pack from the matching directories' bytes — listing
     // only, no data read
@@ -4511,18 +4479,11 @@ object VersionedTable {
     // the matching subdirectories alone
     val hit = live0.filter(predicate)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dv = hit
-        .select(col("__gvt_file").as("_dv_file"), col("__gvt_pos").as("_dv_pos"))
-      val data = hit.drop("__gvt_file", "__gvt_pos")
-      val (rewritten, op) =
-        clusteredRewrite(data, parts, zorderBy, nFiles, "OPTIMIZE_WHERE")
-      write(rewritten, root, partitionBy = parts,
-        statsCols = if (zorderBy.nonEmpty) zorderBy else Seq.empty,
-        metaFiles = Map("_dv_parent" -> v.toString),
-        subdirWrites = Map("_dv" -> dv),
-        baseVersion = Some(v), operation = op, assignIdentity = false)
-    } finally { hit.unpersist(); () }
+    // lazy: the z-order bounds job runs inside commitDv's release scope
+    lazy val (rewritten, op) = clusteredRewrite(
+      hit.drop("__gvt_file", "__gvt_pos"), parts, zorderBy, nFiles,
+      "OPTIMIZE_WHERE")
+    commitDv(spark, snap, hit, Some(rewritten), op, statsCols = zorderBy)
   }
 
   /** The LIVE rows of `files` (members of `snap`'s chain), in logical
@@ -4544,16 +4505,20 @@ object VersionedTable {
   }
 
   /** Non-hidden files under `dir` with their byte sizes ([[listDataFiles]]). */
-  private def listDataFilesWithSize(dir: String): Seq[(String, Long)] = {
+  private def listDataFilesWithSize(dir: String): Seq[(String, Long)] =
+    listDataStatuses(dir).map(st => (st.getPath.toString, st.getLen))
+
+  /** The statuses of [[listDataFiles]]. */
+  private def listDataStatuses(dir: String): Seq[FileStatus] = {
     val p = new HPath(dir)
     val fc = fcOf(p)
     if (!fc.util.exists(p)) return Nil
-    def walk(d: HPath): List[(String, Long)] =
+    def walk(d: HPath): List[FileStatus] =
       fc.util.listStatus(d).toList.flatMap { st =>
         val n = st.getPath.getName
         if (n.startsWith("_") || n.startsWith(".")) Nil
         else if (st.isDirectory) walk(st.getPath)
-        else List((st.getPath.toString, st.getLen))
+        else List(st)
       }
     walk(p)
   }
@@ -4574,29 +4539,18 @@ object VersionedTable {
   def compactSmall(spark: SparkSession, root: String,
                    smallFileBytes: Long = 32L * 1024 * 1024,
                    targetFileBytes: Long = 128L * 1024 * 1024): Long = {
-    import org.apache.spark.sql.functions.col
     val snap = liveSnapshot(root)
-    val v = snap.version
-    val parts = snap.layout
     val cands = snap.dataBearingDirs
       .flatMap(listDataFilesWithSize)
       .filter(_._2 < smallFileBytes)
       .filterNot { case (f, _) => snap.elided(normFileId(f)) }
-    if (cands.size < 2) return v
+    if (cands.size < 2) return snap.version
     val nFiles = math.max(1,
       math.ceil(cands.map(_._2).sum.toDouble / targetFileBytes).toInt)
-    val hit = readLiveFiles(spark, snap, cands.map(_._1), parts.nonEmpty)
-    try {
-      val dv = hit
-        .select(col("__gvt_file").as("_dv_file"), col("__gvt_pos").as("_dv_pos"))
-      val data = hit.drop("__gvt_file", "__gvt_pos")
-      write(data.coalesce(nFiles), root, partitionBy = parts,
-        metaFiles = Map("_dv_parent" -> v.toString),
-        subdirWrites = Map("_dv" -> dv),
-        baseVersion = Some(v),
-        operation = s"OPTIMIZE_SMALL(<${smallFileBytes}B,n=${cands.size})",
-        assignIdentity = false)
-    } finally { hit.unpersist(); () }
+    val hit = readLiveFiles(spark, snap, cands.map(_._1), snap.layout.nonEmpty)
+    commitDv(spark, snap, hit,
+      Some(hit.drop("__gvt_file", "__gvt_pos").coalesce(nFiles)),
+      s"OPTIMIZE_SMALL(<${smallFileBytes}B,n=${cands.size})")
   }
 
   /** The table's registered clustering keys (`gvt.clusterBy`). */
@@ -4650,37 +4604,31 @@ object VersionedTable {
     val nFiles = math.max(1,
       math.ceil(cands.map(_._2).sum.toDouble / targetFileBytes).toInt)
     val hit = readLiveFiles(spark, snap, cands.map(_._1), parts.nonEmpty)
-    try {
-      val dv = hit
-        .select(col("__gvt_file").as("_dv_file"), col("__gvt_pos").as("_dv_pos"))
-      val data = hit.drop("__gvt_file", "__gvt_pos")
-      val (rewritten, op) =
-        if (keys.size == 1) {
-          val order = parts.map(col) :+ col(keys.head)
-          (data.repartitionByRange(nFiles, order: _*)
-            .sortWithinPartitions(order: _*),
-            s"OPTIMIZE_CLUSTER(sort=${keys.head})")
-        } else clusteredRewrite(data, parts, keys, nFiles, "OPTIMIZE_CLUSTER")
-      // zone maps on the cluster keys PLUS any registered
-      // gvt.dataSkippingCols — passing only the keys would silently
-      // drop the table's standing skip columns on the rewritten rows
-      // (explicit statsCols bypass the property fallback in write())
-      val skipExtra = (try tblProperties(root) catch {
-        case scala.util.control.NonFatal(_) => Map.empty[String, String]
-      }).get("gvt.dataSkippingCols").toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-        .filter { c =>
-          data.schema.find(_.name == c).map(_.dataType).exists(dt =>
-            dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
-              dt == org.apache.spark.sql.types.StringType)
-        }
-      write(rewritten, root, partitionBy = parts,
-        statsCols = (keys ++ skipExtra).distinct,
-        metaFiles = Map("_dv_parent" -> v.toString,
-          "_clustered" -> keys.mkString(",")),
-        subdirWrites = Map("_dv" -> dv),
-        baseVersion = Some(v), operation = op, assignIdentity = false)
-    } finally { hit.unpersist(); () }
+    val data = hit.drop("__gvt_file", "__gvt_pos")
+    // lazy: the z-order bounds job runs inside commitDv's release scope
+    lazy val (rewritten, op) =
+      if (keys.size == 1) {
+        val order = parts.map(col) :+ col(keys.head)
+        (data.repartitionByRange(nFiles, order: _*)
+          .sortWithinPartitions(order: _*),
+          s"OPTIMIZE_CLUSTER(sort=${keys.head})")
+      } else clusteredRewrite(data, parts, keys, nFiles, "OPTIMIZE_CLUSTER")
+    // zone maps on the cluster keys PLUS any registered
+    // gvt.dataSkippingCols — passing only the keys would silently
+    // drop the table's standing skip columns on the rewritten rows
+    // (explicit statsCols bypass the property fallback in write())
+    val skipExtra = (try tblProperties(root) catch {
+      case scala.util.control.NonFatal(_) => Map.empty[String, String]
+    }).get("gvt.dataSkippingCols").toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+      .filter { c =>
+        data.schema.find(_.name == c).map(_.dataType).exists(dt =>
+          dt.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
+            dt == org.apache.spark.sql.types.StringType)
+      }
+    commitDv(spark, snap, hit, Some(rewritten), op,
+      statsCols = (keys ++ skipExtra).distinct,
+      metaFiles = Map("_clustered" -> keys.mkString(",")))
   }
 
   /** SHOW PARTITIONS: the live snapshot's hive partition specs, from

@@ -166,7 +166,7 @@ object EventsStream {
     val applyBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit = (batch, id) => {
       if (!batch.isEmpty) {
         val live = graft.sources.VersionedTable.latestVersion(root)
-        // chain-walking watermark: a non-sink commit (merge/deleteWhere)
+        // chain-walking watermark: a non-sink commit (merge/DELETE)
         // interleaved between appends carries no _batch — a tip-only
         // read would resolve None and double-append on crash replay
         val applied = graft.sources.VersionedTable.readMetaLatest(root, "_batch")

@@ -56,8 +56,8 @@ class DmlModelSpec extends AnyFunSuite {
           case 3 => // full-rewrite delete
             val cut = nextK / 2
             model = model.filterNot { case (k, _) => k > cut && k % 7 == 3 }
-            VersionedTable.deleteWhere(spark, root,
-              col("k") > cut && col("k") % 7 === 3)
+            VersionedTable.write(VersionedTable.readLatest(spark, root)
+              .filter(!(col("k") > cut && col("k") % 7 === 3)), root)
           case 4 => // maintenance: materializes DVs, rows must not move
             VersionedTable.compact(spark, root)
           case 5 => // restore to a random committed version

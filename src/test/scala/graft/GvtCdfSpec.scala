@@ -37,7 +37,8 @@ class GvtCdfSpec extends AnyFunSuite {
       // commits landing while the stream runs arrive incrementally —
       // an append (fast path) and a keyed DELETE (diff path)
       VersionedTable.append((61 to 65).toDF("k").withColumn("status", lit("C")), root)
-      VersionedTable.deleteWhere(spark, root, col("k") === 1)
+      VersionedTable.write(VersionedTable.readLatest(spark, root)
+        .filter(!(col("k") === 1)), root)
       q.processAllAvailable()
       val all = spark.table("gvt_cdf_mem")
       assert(all.filter(col("_commit_version") === 3).count() == 5)
@@ -76,7 +77,8 @@ class GvtCdfSpec extends AnyFunSuite {
     val dir = freshDir()
     val root = s"$dir/t"
     VersionedTable.write((1 to 20).toDF("k").withColumn("status", lit("A")), root)
-    VersionedTable.deleteWhere(spark, root, col("k") === 5) // rewrite commit
+    VersionedTable.write(VersionedTable.readLatest(spark, root)
+      .filter(!(col("k") === 5)), root)                   // rewrite commit
     // no keys, no skip: the stream must fail rather than mis-emit
     val q = spark.readStream.format("gvt-cdf").load(root)
       .writeStream.format("memory").queryName("gvt_cdf_fail")
@@ -191,7 +193,8 @@ class GvtCdfSpec extends AnyFunSuite {
       VersionedTable.append((31 to 35).toDF("k"), root)
       q.processAllAvailable()
       assert(spark.table("gvt_rows_mem").count() == 35)
-      VersionedTable.deleteWhere(spark, root, col("k") === 1)
+      VersionedTable.write(VersionedTable.readLatest(spark, root)
+        .filter(!(col("k") === 1)), root)
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q.processAllAvailable()
       }

@@ -558,7 +558,8 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(feed.inputFiles.forall(f => f.contains("/v=2/") || f.contains("/v=3/")),
       s"fast path scanned base files: ${feed.inputFiles.mkString(",")}")
     // a rewrite commit breaks the chain: falls back to the diff join
-    VersionedTable.deleteWhere(spark, root, col("id") === 1) // v4 full rewrite
+    VersionedTable.write(VersionedTable.readLatest(spark, root)
+      .filter(!(col("id") === 1)), root)                  // v4 full rewrite
     val slow = VersionedTable.changes(spark, root, 3L, 4L, Seq("id"))
     assert(slow.queryExecution.executedPlan.toString.toLowerCase.contains("join"))
     assert(slow.select("_change_type").as[String].collect().toSeq == Seq("delete"))
@@ -910,7 +911,8 @@ class VersionedTableSpec extends AnyFunSuite {
     // deep clone: rows copied, fully decoupled from day one
     VersionedTable.cloneTable(spark, src, dp)
     assert(spark.read.parquet(s"$dp/v=1").count() == 10)
-    VersionedTable.deleteWhere(spark, src, col("id") <= 5)
+    VersionedTable.write(VersionedTable.readLatest(spark, src)
+      .filter(!(col("id") <= 5)), src)
     assert(VersionedTable.readLatest(spark, dp).count() == 10)
     assert(VersionedTable.history(spark, dp).select("operation")
       .as[String].head().startsWith("CLONE(deep"))
@@ -978,7 +980,8 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.append((11 to 20).toDF("id"), root,
       metaFiles = Map("_batch" -> "1"))
     // a non-sink commit lands on the same root: no _batch on the tip
-    VersionedTable.deleteWhere(spark, root, col("id") === 1)
+    VersionedTable.write(VersionedTable.readLatest(spark, root)
+      .filter(!(col("id") === 1)), root)
     assert(VersionedTable.readMeta(root,
       VersionedTable.latestVersion(root).get, "_batch").isEmpty)
     // the chain walk still resolves the applied watermark
@@ -1237,9 +1240,10 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(r4.isNullAt(1) && r4.getInt(2) == 40)
   }
 
-  test("full-rewrite commits (restore / deleteWhere / updateWhere / " +
-    "merge) preserve the hive layout; an all-rows delete degrades to a " +
-    "layout-carrying schema slice") {
+  // a full-snapshot rewrite, a DV update's slice, merge and restore
+  // preserve the hive layout; a zero-row rewrite degrades to a
+  // layout-carrying schema slice
+  test("hive layout survives rewrites and zero-row writes") {
     def hiveDirs(root: String): Boolean = {
       val v = VersionedTable.latestVersion(root).get
       val d = new java.io.File(s"$root/v=$v")
@@ -1250,22 +1254,25 @@ class VersionedTableSpec extends AnyFunSuite {
       Seq((1L, 10L, "a"), (2L, 20L, "b"), (3L, 30L, "a"))
         .toDF("k", "v", "p"),
       root, partitionBy = Seq("p"))
-    VersionedTable.deleteWhere(spark, root, col("k") === 2L)
-    assert(hiveDirs(root), "deleteWhere stripped the layout")
-    VersionedTable.updateWhere(spark, root, col("k") === 1L,
+    def rewriteWhere(p: org.apache.spark.sql.Column): Long =
+      VersionedTable.write(VersionedTable.readLatest(spark, root).filter(!p),
+        root, partitionBy = Seq("p"))
+    rewriteWhere(col("k") === 2L)
+    assert(hiveDirs(root), "a full-snapshot delete stripped the layout")
+    VersionedTable.updateWhereVector(spark, root, col("k") === 1L,
       Map("v" -> lit(99L)))
-    assert(hiveDirs(root), "updateWhere stripped the layout")
+    assert(hiveDirs(root), "a DV update stripped the layout")
     VersionedTable.merge(spark, root,
       Seq((4L, 40L, "b")).toDF("k", "v", "p"), Seq("k"))
     assert(hiveDirs(root), "merge stripped the layout")
     VersionedTable.restore(spark, root, 1L)
     assert(hiveDirs(root), "restore stripped the layout")
     assert(VersionedTable.readLatest(spark, root).count() == 3)
-    // all-rows full-rewrite delete: a zero-row dynamic-partition write
+    // all-rows full-snapshot delete: a zero-row dynamic-partition write
     // has no files to carry the layout — the commit degrades to a
     // schema-only slice with the DECLARED layout, so the next append
     // still partitions
-    VersionedTable.deleteWhere(spark, root, lit(true))
+    rewriteWhere(lit(true))
     assert(VersionedTable.readLatest(spark, root).count() == 0)
     VersionedTable.append(Seq((9L, 90L, "c")).toDF("k", "v", "p"), root)
     assert(hiveDirs(root), "layout lost across the empty rewrite")
